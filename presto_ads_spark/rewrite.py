@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import math
 import re
+from bisect import bisect_left, bisect_right
 from collections.abc import Callable
+from functools import cached_property
 
 # Presto name -> Spark name, applied as word-boundary renames outside string
 # literals. Only pure renames belong here; anything needing argument surgery
@@ -147,35 +149,289 @@ def _rewrite_bare_time_keywords(chunk: str) -> str:
     )
 
 
+# One string literal: a '' escape reads as two adjacent literals, and an
+# unterminated one runs to the end of the text.
+_LEX_LITERAL_RE = re.compile(r"'[^']*'?")
+_LEX_STRUCT_RE = re.compile(r"[()\[\],]")
+# clause keywords that decide whether a '(' opens a FROM item; a word
+# reads up to its last letter, so ``from2`` counts as FROM
+_RELATION_KEYWORDS = {
+    "FROM": True, "JOIN": True,
+    **dict.fromkeys((
+        "SELECT", "WHERE", "ON", "HAVING", "BY", "WHEN", "THEN", "ELSE",
+        "AND", "OR", "NOT", "IN", "EXISTS", "UNION", "INTERSECT", "EXCEPT",
+        "VALUES", "SET",
+    ), False),
+}
+_RELATION_TOKEN_RE = re.compile(r"[()]|\b([A-Za-z_]+)\d*\b")
+
+
+class _Lex:
+    """One left-to-right pass over a SQL text, indexing what the
+    rewrite passes need to know about its structure: the string
+    literals, which ``(``/``[`` each ``)``/``]`` closes, the depth at
+    every paren and bracket, and where the commas are. Characters inside
+    literals are data — they never count as structure. The structural
+    index is built on first use. Get one with ``_lex``."""
+
+    builds = 0  # lexers built so far (the linear-time test reads it)
+
+    def __init__(self, sql: str) -> None:
+        _Lex.builds += 1
+        self.text = sql
+        self.mask = mask = [False] * len(sql)  # True inside '…' (quotes too)
+        self.literals: list[tuple[int, int]] = []  # maximal '…' runs
+        lits = self.literals
+        for m in _LEX_LITERAL_RE.finditer(sql):
+            a, b = m.span()
+            mask[a:b] = [True] * (b - a)
+            if lits and lits[-1][1] == a:
+                lits[-1] = (lits[-1][0], b)
+            else:
+                lits.append((a, b))
+        self._relation: set[int] | None = None
+
+    @cached_property
+    def _structure(self):
+        close: dict[int, int] = {}  # '(' index → index past its ')'
+        bclose: dict[int, int] = {}  # '[' index → index past its ']'
+        # structural chars outside literals, each with the depth after
+        # it: parens only, and parens plus brackets (either may go < 0)
+        parens, pdepth, groups, gdepth, commas = [], [], [], [], []
+        pstack, bstack, pd, gd, mask = [], [], 0, 0, self.mask
+        for m in _LEX_STRUCT_RE.finditer(self.text):
+            a = m.start()
+            if mask[a]:
+                continue
+            c = m.group()
+            if c == ",":
+                commas.append(a)
+                continue
+            if c == "(":
+                pstack.append(a)
+                pd += 1
+                gd += 1
+            elif c == ")":
+                if pstack:
+                    close[pstack.pop()] = a + 1
+                pd -= 1
+                gd -= 1
+            elif c == "[":
+                bstack.append(a)
+                gd += 1
+            else:
+                if bstack:
+                    bclose[bstack.pop()] = a + 1
+                gd -= 1
+            groups.append(a)
+            gdepth.append(gd)
+            if c in "()":
+                parens.append(a)
+                pdepth.append(pd)
+        return close, bclose, parens, pdepth, groups, gdepth, commas
+
+    @cached_property
+    def _lower(self) -> str | None:
+        return self.text.lower() if self.text.isascii() else None
+
+    def mentions(self, word: str) -> bool:
+        """False only when ``word`` provably does not occur in the text,
+        in any case: a probe before a case-blind regex scan for it."""
+        return self._lower is None or word.lower() in self._lower
+
+    close = property(lambda self: self._structure[0])
+    bclose = property(lambda self: self._structure[1])
+    parens = property(lambda self: self._structure[2])
+    pdepth = property(lambda self: self._structure[3])
+    groups = property(lambda self: self._structure[4])
+    gdepth = property(lambda self: self._structure[5])
+    commas = property(lambda self: self._structure[6])
+
+    def paren_depth(self, i: int) -> int:
+        """Paren depth just after sql[i]."""
+        k = bisect_right(self.parens, i)
+        return self.pdepth[k - 1] if k else 0
+
+    def group_depth(self, i: int) -> int:
+        """Paren-plus-bracket depth just after sql[i]."""
+        k = bisect_right(self.groups, i)
+        return self.gdepth[k - 1] if k else 0
+
+    def match_paren(self, start: int) -> int:
+        """Index just past the ``)`` closing the ``(`` at ``start - 1``
+        (the end of the text when it is unclosed). A ``start`` that is
+        not just past a structural ``(`` — a pass that matched inside a
+        literal — counts from ``start`` as if outside any literal."""
+        sql = self.text
+        if start and sql[start - 1] == "(" and not self.mask[start - 1]:
+            return self.close.get(start - 1, len(sql))
+        return _Lex("(" + sql[start:]).match_paren(1) - 1 + start
+
+    def group_end(self, a: int) -> int:
+        """Index of the first ``)``/``]`` from ``a`` on that closes a
+        group opened before ``a`` (the end of the text when none does)."""
+        base = self.group_depth(a - 1) if a else 0
+        k = bisect_left(self.groups, a)
+        for p, d in zip(self.groups[k:], self.gdepth[k:]):
+            if d < base:
+                return p
+        return len(self.text)
+
+    def list_end(self, a: int, stop: re.Pattern) -> int:
+        """End of the list that starts at ``a``: its first unbalanced
+        ``)``/``]``, the first ``stop`` match outside literals at its own
+        depth, or the end of the text."""
+        end = self.group_end(a)
+        base = self.group_depth(a - 1) if a else 0
+        for k in _unmasked(stop, self, a):
+            if k.start() >= end:
+                break
+            if self.group_depth(k.start()) == base:
+                return k.start()
+        return end
+
+    def top_level(self, a: int, b: int, seps: str = ",") -> list[int]:
+        """Positions in [a, b) of the ``seps`` characters outside
+        literals and at the paren-plus-bracket depth of ``a``."""
+        base = self.group_depth(a - 1) if a else 0
+        if seps == ",":
+            cands = self.commas[bisect_left(self.commas, a):
+                                bisect_left(self.commas, b)]
+        else:
+            cands = [
+                i for i in range(a, b)
+                if self.text[i] in seps and not self.mask[i]
+            ]
+        return [i for i in cands if self.group_depth(i) == base]
+
+    def split(self, a: int, b: int, seps: str = ",") -> list[str]:
+        """sql[a:b] split on its top-level ``seps`` characters."""
+        out, last = [], a
+        for i in self.top_level(a, b, seps):
+            out.append(self.text[last:i])
+            last = i + 1
+        out.append(self.text[last:b])
+        return out
+
+    def args(self, a: int, b: int) -> list[str]:
+        """The stripped, non-empty top-level comma items of sql[a:b]."""
+        return [x for x in (x.strip() for x in self.split(a, b)) if x]
+
+    def in_literal(self, a: int, b: int) -> list[tuple[int, int]]:
+        """The literal runs inside [a, b) — none straddles an end when
+        both ends sit outside literals or on a structural character."""
+        lits = self.literals
+        k = bisect_left(lits, (a, -1))
+        out = []
+        while k < len(lits) and lits[k][0] < b:
+            out.append(lits[k])
+            k += 1
+        return out
+
+    def blank_nested(self) -> str:
+        """The text with literals, parens, brackets and everything inside
+        them blanked to spaces."""
+        sql, out, prev, depth = self.text, [], 0, 0
+        for pos, d in [*zip(self.groups, self.gdepth), (len(sql), 0)]:
+            if depth == 0:
+                for la, lb in self.in_literal(prev, pos):
+                    out.append(sql[prev:la])
+                    out.append(" " * (lb - la))
+                    prev = lb
+                out.append(sql[prev:pos])
+            else:
+                out.append(" " * (pos - prev))
+            out.append(" ")
+            prev, depth = pos + 1, d
+        return "".join(out)[: len(sql)]
+
+    def relation_parens(self) -> set[int]:
+        """Positions of the ``(`` that open a FROM item: the nearest
+        clause keyword before it at its own paren level is FROM or JOIN
+        (``FROM (…)``, ``JOIN (…)``, ``FROM a, (…)``)."""
+        if self._relation is None:
+            mask, rel, frames = self.mask, set(), [False]
+            for m in _RELATION_TOKEN_RE.finditer(self.text):
+                if mask[m.start()]:
+                    continue
+                w = m.group()
+                if w == "(":
+                    if frames[-1]:
+                        rel.add(m.start())
+                    frames.append(False)
+                elif w == ")":
+                    if len(frames) > 1:
+                        frames.pop()
+                    else:  # unmatched: what precedes it is out of reach
+                        frames[-1] = False
+                else:
+                    d = _RELATION_KEYWORDS.get(m.group(1).upper())
+                    if d is not None:
+                        frames[-1] = d
+            self._relation = rel
+        return self._relation
+
+
+_LAST_LEX: _Lex | None = None
+
+
+def _lex(sql: str) -> _Lex:
+    """The lexer for ``sql``; the last one built is reused while the
+    text is unchanged, so passes that leave the text alone share it."""
+    global _LAST_LEX
+    lx = _LAST_LEX
+    if lx is None or (lx.text is not sql and lx.text != sql):
+        lx = _LAST_LEX = _Lex(sql)
+    return lx
+
+
+def _unmasked(pat: re.Pattern, lx: _Lex, pos: int = 0):
+    """Matches of ``pat`` in the lexed text from ``pos`` that start
+    outside string literals."""
+    mask = lx.mask
+    for m in pat.finditer(lx.text, pos):
+        if not mask[m.start()]:
+            yield m
+
+
+def _lex_at(lx: _Lex, i: int) -> tuple[_Lex, int]:
+    """A lexer that reads the text from ``i`` on as code, and its offset:
+    ``lx`` itself when sql[i] is outside literals, else a lexer of
+    sql[i:] — for scans that start after a keyword matched without a
+    literal check."""
+    if i < len(lx.text) and lx.mask[i]:
+        return _Lex(lx.text[i:]), i
+    return lx, 0
+
+
+def _text_before(sql: str, end: int) -> str:
+    """``sql[:end].rstrip()`` cut back to its last word and the character
+    before that word: enough for a ``…$`` check of one keyword or
+    operator, without copying the whole prefix."""
+    k = end
+    while k and sql[k - 1].isspace():
+        k -= 1
+    j = k
+    while j and (sql[j - 1].isalnum() or sql[j - 1] == "_"):
+        j -= 1
+    return sql[max(j - 1, 0) : k]
+
+
+def _literal_mask(sql: str) -> list[bool]:
+    """True where sql[i] is inside a '…' string literal (quotes included)."""
+    return _lex(sql).mask
+
+
 def _split_literals(sql: str) -> list[tuple[str, bool]]:
     """Split SQL into (chunk, is_string_literal) segments."""
     out: list[tuple[str, bool]] = []
-    i, n = 0, len(sql)
-    buf = []
-    in_str = False
-    while i < n:
-        c = sql[i]
-        if not in_str:
-            if c == "'":
-                out.append(("".join(buf), False))
-                buf = [c]
-                in_str = True
-            else:
-                buf.append(c)
-        else:
-            buf.append(c)
-            if c == "'":
-                # '' is an escaped quote inside the literal
-                if i + 1 < n and sql[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    out.append(("".join(buf), True))
-                    buf = []
-                    in_str = False
-        i += 1
-    if buf:
-        out.append(("".join(buf), in_str))
+    last = 0
+    for a, b in _lex(sql).literals:
+        out.append((sql[last:a], False))
+        out.append((sql[a:b], True))
+        last = b
+    if last < len(sql):
+        out.append((sql[last:], False))
     return out
 
 
@@ -258,7 +514,7 @@ def _unnest_struct_fields(arg: str, ctx: str | None = None) -> list[str] | None:
         t = re.search(r"\bAS\s+ARRAY\s*\(\s*ROW\s*\(", s, re.IGNORECASE)
         if not t:
             return None
-        close = _scan_matching_paren(s, t.end())
+        close = _Lex(s).match_paren(t.end())
         names = []
         for f in _split_top_level(s[t.end() : close - 1]):
             fm = re.match(r'\s*([A-Za-z_]\w*|"[^"]+")\s+\S', f)
@@ -272,7 +528,7 @@ def _unnest_struct_fields(arg: str, ctx: str | None = None) -> list[str] | None:
         r"(?:ARRAY\s*\[|ARRAY\s*\()\s*(?:ROW|struct)\s*\(", s, re.IGNORECASE
     )
     if m:
-        close = _scan_matching_paren(s, m.end())
+        close = _Lex(s).match_paren(m.end())
         nf = len(_split_top_level(s[m.end() : close - 1]))
         return [f"col{k + 1}" for k in range(nf)]
     if ctx is not None and re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)?", s):
@@ -439,7 +695,7 @@ def _rewrite_values_with_lambdas(sql: str) -> str:
             it = it.strip()
             vals = (
                 _split_top_level(it[1:-1])
-                if it.startswith("(") and _scan_matching_paren(it, 1) == len(it)
+                if it.startswith("(") and _Lex(it).match_paren(1) == len(it)
                 and len(cols) > 1
                 else [it]
             )
@@ -562,12 +818,16 @@ def _unnest_replacement(expr, ordinality, alias, col, col2) -> str:
 
 
 def _rename_functions(chunk: str) -> str:
+    # an ASCII chunk that lacks the name in lower case cannot match
+    low = chunk.lower() if chunk.isascii() else None
     for presto, spark in FUNCTION_RENAMES.items():
-        if presto == spark:
+        if presto == spark or (low is not None and presto not in low):
             continue
-        chunk = re.sub(
+        new = re.sub(
             rf"\b{presto}\s*\(", f"{spark}(", chunk, flags=re.IGNORECASE
         )
+        if new != chunk:
+            chunk, low = new, new.lower() if new.isascii() else None
     return chunk
 
 
@@ -595,19 +855,7 @@ def _rewrite_datetime_patterns(sql: str) -> str:
             out.append(sql[i:])
             return "".join(out)
         fn = m.group(1).lower()
-        # find matching close paren
-        depth, j, in_str = 1, m.end(), False
-        while j < len(sql) and depth:
-            c = sql[j]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
+        j = _lex(sql).match_paren(m.end())
         args = sql[m.end() : j - 1]
         pat = re.search(r"'([^']*)'\s*$", args)
         if fn == "date_parse" and pat:
@@ -785,22 +1033,6 @@ def _rewrite_joda_datetime_fns(sql: str) -> str:
         i = j
 
 
-def _literal_mask(sql: str) -> list[bool]:
-    """True where sql[i] is inside a '…' string literal (quotes included).
-    Doubled '' escapes read as two adjacent literals — mask still correct."""
-    mask = [False] * len(sql)
-    in_str = False
-    for i, c in enumerate(sql):
-        if in_str:
-            mask[i] = True
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            mask[i] = True
-            in_str = True
-    return mask
-
-
 def _expr_start(sql: str, mask: list[bool], end: int) -> int | None:
     """Start of the primary expression ending just before ``end``: an
     identifier chain, a ``fn(…)``/``(…)``/``…[…]`` tail, or a (typed)
@@ -870,30 +1102,29 @@ _ARRAY_LIT_RE = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
 
 def _rewrite_array_literals(sql: str) -> str:
     """Presto ``ARRAY[1, 2]`` (SqlBase.g4 arrayConstructor) → ``array(1, 2)``;
-    ``MAP(ARRAY[…], ARRAY[…])`` (MapConstructor) → ``map_from_arrays(…)``."""
+    ``MAP(ARRAY[…], ARRAY[…])`` (MapConstructor) → ``map_from_arrays(…)``.
+    An unclosed ``ARRAY[`` takes the rest of the text, less its last
+    character, as its elements."""
+    done: list[str] = []
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _ARRAY_LIT_RE.finditer(sql):
-            if not mask[cand.start()]:
-                m = cand
+        lx = _lex(sql)
+        edits, tail = [], None
+        for m in _unmasked(_ARRAY_LIT_RE, lx):
+            close = lx.bclose.get(m.end() - 1)
+            if close is None:
+                tail = m
                 break
-        if m is None:
+            edits += [(m.start(), m.end(), "array("), (close - 1, close, ")")]
+        last = 0
+        for a, b, rep in sorted(edits):
+            done += [sql[last:a], rep]
+            last = b
+        if tail is None:
+            done.append(sql[last:])
             break
-        depth, j, in_str = 1, m.end(), False
-        while j < len(sql) and depth:
-            c = sql[j]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-            j += 1
-        sql = sql[: m.start()] + "array(" + sql[m.end() : j - 1] + ")" + sql[j:]
-    return re.sub(r"\bMAP\s*\(\s*array\(", "map_from_arrays(array(", sql)
+        done += [sql[last : tail.start()], "array("]
+        sql = sql[tail.end() : -1] + ")"
+    return re.sub(r"\bMAP\s*\(\s*array\(", "map_from_arrays(array(", "".join(done))
 
 
 _SCALAR_LIT_ITEM_RE = re.compile(
@@ -1191,48 +1422,27 @@ def _rewrite_at_time_zone(sql: str) -> str:
 
 def _split_top_level(s: str) -> list[str]:
     """Split an argument list on depth-0 commas (paren/bracket/literal-aware)."""
-    args: list[str] = []
-    depth, in_str, last = 0, False, 0
-    for i, c in enumerate(s):
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            args.append(s[last:i])
-            last = i + 1
-    args.append(s[last:])
-    return [a for a in (a.strip() for a in args) if a != ""] or []
+    return _Lex(s).args(0, len(s))
 
 
 def _map_fn_args(sql: str, fname: str, xform) -> str:
     """Rewrite every top-level call of ``fname``: xform(args) returns the new
     argument list (list of strings) or None to leave the call unchanged."""
+    lx = _lex(sql)
+    if not lx.mentions(fname):
+        return sql
     pat = re.compile(rf"\b{fname}\s*\(", re.IGNORECASE)
-    out: list[str] = []
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in pat.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            out.append(sql[i:])
-            return "".join(out)
-        j = _scan_matching_paren(sql, m.end())
-        new_args = xform(_split_top_level(sql[m.end() : j - 1]))
-        out.append(sql[i : m.start()])
-        if new_args is None:
-            out.append(sql[m.start() : j])
-        else:
-            out.append(f"{fname}({', '.join(new_args)})")
-        i = j
+    out, last, pos = [], 0, 0
+    for m in _unmasked(pat, lx):
+        if m.start() < pos:
+            continue  # inside a call already mapped
+        pos = lx.match_paren(m.end())
+        new_args = xform(lx.args(m.end(), pos - 1))
+        if new_args is not None:
+            out += [sql[last : m.start()], f"{fname}({', '.join(new_args)})"]
+            last = pos
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _replace_fn_calls(sql: str, fname: str, builder) -> str:
@@ -1243,24 +1453,24 @@ def _replace_fn_calls(sql: str, fname: str, builder) -> str:
     must therefore never emit a same-name call (all current ones rename).
     When the builder declines (None), scanning continues INSIDE the
     call's arguments."""
+    lx = _lex(sql)
+    if not lx.mentions(fname):
+        return sql
     pat = re.compile(rf"\b{fname}\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in pat.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
-        new = builder(_split_top_level(sql[m.end() : j - 1]))
+    out, last = [], 0
+    for m in _unmasked(pat, lx):
+        if m.start() < last:
+            continue  # inside a replaced call: handled with its text
+        j = lx.match_paren(m.end())
+        new = builder(lx.args(m.end(), j - 1))
         if new is None:
-            pos = m.end()
             continue
-        sql = sql[: m.start()] + new + sql[j:]
-        pos = m.start()
+        if pat.search(new):
+            new = _replace_fn_calls(new, fname, builder)
+        out += [sql[last : m.start()], new]
+        last = j
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _rewrite_sign_typed(sql: str) -> str:
@@ -1289,7 +1499,7 @@ def _rewrite_sign_typed(sql: str) -> str:
             target = "DECIMAL(1,0)"
         else:
             cm = re.match(r"(?i)^(?:TRY_)?CAST\s*\(", a)
-            if cm and _scan_matching_paren(a, cm.end()) == len(a):
+            if cm and _Lex(a).match_paren(cm.end()) == len(a):
                 tm = re.search(
                     r"(?i)\bAS\s+(TINYINT|SMALLINT|INTEGER|INT|BIGINT"
                     r"|REAL|FLOAT|DECIMAL\s*\([^)]*\)|DECIMAL)\s*\)$",
@@ -1583,14 +1793,14 @@ def _expand_grouping_item(item: str) -> list[list[str]] | None:
     m = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.IGNORECASE)
     if m is None:
         return [[item.strip()]]
-    close = _scan_matching_paren(item, m.end())
+    close = _Lex(item).match_paren(m.end())
     if item[close:].strip():
         return None
     entries = _split_top_level(item[m.end() : close - 1])
 
     def cols(e: str) -> list[str]:
         e = e.strip()
-        if e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
+        if e.startswith("(") and _Lex(e).match_paren(1) == len(e):
             return [c for c in _split_top_level(e[1:-1])]
         return [e]
 
@@ -1835,6 +2045,9 @@ _WADL_NUM = re.compile(r"(?<![\w.])-?\d+(?:\.\d+)?(?![\w.])")
 _WADL_CMP_RE = re.compile(r"\barray\s*\(", re.IGNORECASE)
 
 
+_WADL_CMP_OP_RE = re.compile(r"\s*(!=|<>|<=|>=|=|<|>)\s*")
+
+
 def _widen_array_decimal_literals(sql: str) -> str:
     """Presto coerces the operands of array functions and array
     comparisons to the common DECIMAL supertype (max integer digits +
@@ -1879,34 +2092,24 @@ def _widen_array_decimal_literals(sql: str) -> str:
         sql = _map_fn_args(sql, fn, widen)
 
     # array(...) <op> array(...) literal comparisons
-    pos = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _WADL_CMP_RE.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return sql
-        a_end = _scan_matching_paren(sql, m.end())
-        om = re.match(r"\s*(!=|<>|<=|>=|=|<|>)\s*", sql[a_end:])
-        if not om:
-            pos = m.end()
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_WADL_CMP_RE, lx):
+        if m.start() < last:
             continue
-        bm = _WADL_CMP_RE.match(sql, a_end + om.end())
+        a_end = lx.match_paren(m.end())
+        om = _WADL_CMP_OP_RE.match(sql, a_end)
+        bm = om and _WADL_CMP_RE.match(sql, om.end())
         if not bm:
-            pos = m.end()
             continue
-        b_end = _scan_matching_paren(sql, bm.end())
-        a_txt, b_txt = sql[m.start() : a_end], sql[a_end + om.end() : b_end]
-        new = widen([a_txt, b_txt])
+        b_end = lx.match_paren(bm.end())
+        new = widen([sql[m.start() : a_end], sql[om.end() : b_end]])
         if new is None:
-            pos = m.end()
             continue
-        rep = f"{new[0]} {om.group(1)} {new[1]}"
-        sql = sql[: m.start()] + rep + sql[b_end:]
-        pos = m.start() + len(rep)
+        out += [sql[last : m.start()], f"{new[0]} {om.group(1)} {new[1]}"]
+        last = b_end
+    out.append(sql[last:])
+    return "".join(out)
 
 
 _LCD_LAMBDA_RE = re.compile(
@@ -1921,7 +2124,7 @@ def _lcd_depth(e: str, env: dict) -> int | None:
     """Array-nesting depth of a literal-ish expression under a lambda
     environment (var → depth). None = unknown."""
     e = e.strip()
-    while e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
+    while e.startswith("(") and _Lex(e).match_paren(1) == len(e):
         e = e[1:-1].strip()
     if not e:
         return None
@@ -1932,7 +2135,7 @@ def _lcd_depth(e: str, env: dict) -> int | None:
     m = re.match(r"(?is)^array\s*[\[(]", e)
     if m:
         close = (
-            _scan_matching_paren(e, m.end())
+            _Lex(e).match_paren(m.end())
             if e[m.end() - 1] == "("
             else None
         )
@@ -1946,7 +2149,7 @@ def _lcd_depth(e: str, env: dict) -> int | None:
             return None
         return 1 + max(depths)
     fm = re.match(r"^([A-Za-z_]\w*)\s*\(", e)
-    if fm and _scan_matching_paren(e, fm.end()) == len(e):
+    if fm and _Lex(e).match_paren(fm.end()) == len(e):
         fn = fm.group(1).lower()
         args = _split_top_level(e[fm.end() : -1])
         if fn == "transform" and len(args) == 2:
@@ -2006,21 +2209,11 @@ def _lcd_fix_body(body: str, env: dict) -> str:
 
     body = _map_fn_args(body, "concat", concat_fix)
     # top-level || chain
-    parts, mask, depth, start = [], _literal_mask(body), 0, 0
-    k = 0
-    while k < len(body) - 1:
-        c = body[k]
-        if not mask[k]:
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif depth == 0 and c == "|" and body[k + 1] == "|":
-                parts.append(body[start:k])
-                start = k + 2
-                k += 2
-                continue
-        k += 1
+    parts, start = [], 0
+    for k in _lex(body).top_level(0, len(body) - 1, "|"):
+        if k >= start and body[k + 1] == "|":
+            parts.append(body[start:k])
+            start = k + 2
     if parts:
         parts.append(body[start:])
         fixed = fix_items(parts)
@@ -2058,7 +2251,7 @@ def _rewrite_lambda_concat_depths(sql: str) -> str:
             mm = re.match(r"(?is)^map\s*\(", src)
             if not mm or not v2:
                 return None
-            close = _scan_matching_paren(src, mm.end())
+            close = _Lex(src).match_paren(mm.end())
             if close != len(src):
                 return None
             margs = _split_top_level(src[mm.end() : close - 1])
@@ -2206,7 +2399,7 @@ def _rewrite_try_generic(sql: str) -> str:
         # column-division pre-rewrite parenthesizes its DIV output)
         while (
             e.startswith("(")
-            and _scan_matching_paren(e, 1) == len(e.rstrip())
+            and _Lex(e).match_paren(1) == len(e.rstrip())
         ):
             e = e[1 : e.rstrip().rindex(")")].strip()
         # any CAST under the TRY scope may fail and be swallowed
@@ -2244,12 +2437,12 @@ def _rewrite_try_generic(sql: str) -> str:
                     # the integral-division pre-rewrite emits (-(7 DIV b))
                     while (
                         s.startswith("(")
-                        and _scan_matching_paren(s, 1) == len(s.rstrip())
+                        and _Lex(s).match_paren(1) == len(s.rstrip())
                     ):
                         s = s[1:s.rstrip().rindex(")")].strip()
                     mu = re.match(r"^([-+])\s*\(", s)
-                    if mu and _scan_matching_paren(
-                        s, mu.end()
+                    if mu and _Lex(
+                        s).match_paren(mu.end()
                     ) == len(s.rstrip()):
                         inner = _try_side(
                             s[mu.end():s.rstrip().rindex(")")].strip()
@@ -2266,7 +2459,7 @@ def _rewrite_try_generic(sql: str) -> str:
         # inner expression is itself try-lowered first. (A DOUBLE inner
         # equal to -2^63 would false-NULL — integral-typed sites only.)
         mm = re.match(r"^abs\s*\(", e, re.IGNORECASE)
-        if mm and _scan_matching_paren(e, mm.end()) == len(e):
+        if mm and _Lex(e).match_paren(mm.end()) == len(e):
             x = e[mm.end():-1].strip()
             xl = _lower_try_arith(x) or x
             return (f"(CASE WHEN ({xl}) = BIGINT '-9223372036854775808'"
@@ -2277,7 +2470,7 @@ def _rewrite_try_generic(sql: str) -> str:
         # generic pass-through below would let the runtime error escape.
         mm = re.match(r"^map(?:_from_arrays)?\s*\(", e, re.IGNORECASE)
         if mm:
-            close = _scan_matching_paren(e, mm.end())
+            close = _Lex(e).match_paren(mm.end())
             if close == len(e):
                 args = _split_top_level(e[mm.end() : close - 1])
                 if len(args) == 2:
@@ -2308,7 +2501,7 @@ def _rewrite_try_generic(sql: str) -> str:
         # json_parse + TRY → NULL on malformed text)
         mm = re.match(r"^json_parse\s*\(", e, re.IGNORECASE)
         if mm:
-            close = _scan_matching_paren(e, mm.end())
+            close = _Lex(e).match_paren(mm.end())
             if close == len(e):
                 x = e[mm.end() : close - 1].strip()
                 # the canonicalizer returns NULL on malformed text —
@@ -2330,25 +2523,15 @@ def _top_level_binops(e: str) -> list:
     """Positions of top-level binary arithmetic operators in ``e``
     (unary +/- signs excluded; includes the engine's lowered integral
     ``DIV``), as (index, token) pairs in order."""
-    pos, depth, in_str = [], 0, False
-    for k, c in enumerate(e):
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c in _TRY_OPS:
-            j = k - 1
-            while j >= 0 and e[j].isspace():
-                j -= 1
-            if c in "+-" and (j < 0 or e[j] in "(,+-*/%"):
-                continue  # unary sign
-            pos.append((k, c))
-    mask = _mask_parens_and_literals(e)
-    for m in re.finditer(r"\bDIV\b", mask):
+    lx, pos = _Lex(e), []
+    for k in lx.top_level(0, len(e), _TRY_OPS):
+        j = k - 1
+        while j >= 0 and e[j].isspace():
+            j -= 1
+        if e[k] in "+-" and (j < 0 or e[j] in "(,+-*/%"):
+            continue  # unary sign
+        pos.append((k, e[k]))
+    for m in re.finditer(r"\bDIV\b", lx.blank_nested()):
         pos.append((m.start(), "DIV"))
     pos.sort()
     return pos
@@ -2361,7 +2544,7 @@ def _lower_try_arith(e: str):
     try_add(try_multiply(a, b), c), not try_multiply(a, b+c)). Returns
     None when no top-level arithmetic operator exists."""
     e = e.strip()
-    while e.startswith("(") and _scan_matching_paren(e, 1) == len(e.rstrip()):
+    while e.startswith("(") and _Lex(e).match_paren(1) == len(e.rstrip()):
         e = e[1 : e.rstrip().rindex(")")].strip()
     # a top-level predicate keyword means +/- tokens may be unary signs
     # after a keyword (ELSE -8) or live inside an arm/operand (THEN 1+2,
@@ -2496,7 +2679,7 @@ def _casts_to_try(e: str) -> str:
     def wrap(x: str) -> str:
         return lead + x + trail
 
-    if s.startswith("(") and _scan_matching_paren(s, 1) == len(s):
+    if s.startswith("(") and _Lex(s).match_paren(1) == len(s):
         return wrap("(" + _casts_to_try(s[1:-1]) + ")")
     masked = _mask_parens_and_literals(s)
     if "->" in masked:  # top-level lambda arrow: leave alone
@@ -2531,7 +2714,7 @@ def _casts_to_try(e: str) -> str:
             out.append(_casts_to_try(s[prev:]))
             return wrap("".join(out))
     fm = re.match(r"(\w+)\s*\(", s)
-    if fm and _scan_matching_paren(s, fm.end()) == len(s):
+    if fm and _Lex(s).match_paren(fm.end()) == len(s):
         fn = fm.group(1).lower()
         inner = s[fm.end() : -1]
         if fn in ("cast", "try_cast"):
@@ -2615,24 +2798,15 @@ def _lower_try_case(e: str):
 def _mask_parens_and_literals(e: str) -> str:
     """Copy of ``e`` with characters inside parens/brackets/strings
     blanked — top-level-operator scans regex over the result."""
-    out, depth, in_str = [], 0, False
-    for c in e:
-        if in_str:
-            out.append(" ")
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            out.append(" ")
-            in_str = True
-        elif c in "([":
-            depth += 1
-            out.append(" ")
-        elif c in ")]":
-            depth -= 1
-            out.append(" ")
-        else:
-            out.append(c if depth == 0 else " ")
-    return "".join(out)
+    return _Lex(e).blank_nested()
+
+
+_VALUES_KW_RE = re.compile(r"\bVALUES\b", re.IGNORECASE)
+_VALUES_LIST_END_RE = re.compile(
+    r"(?=(?:ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE|GROUP|HAVING|AS)\b)",
+    re.IGNORECASE,
+)
+_ROW_ITEM_RE = re.compile(r"(\s*)ROW\s*\(", re.IGNORECASE)
 
 
 def _strip_values_row(sql: str) -> str:
@@ -2640,57 +2814,28 @@ def _strip_values_row(sql: str) -> str:
     standard row constructor, not a struct value; strip the keyword so
     each item becomes a plain parenthesized row. Scalar ROW(..) calls
     elsewhere stay for _rewrite_row_constructor (→ struct)."""
-    out = []
-    i = 0
-    while True:
-        m = re.search(r"\bVALUES\b", sql[i:], re.IGNORECASE)
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        start = i + m.end()
-        out.append(sql[i : start])
-        j, depth, in_str = start, 0, False
-        buf: list[str] = []
-
-        def flush(b):
-            s = "".join(b)
-            sm = re.match(r"^(\s*)ROW\s*\(", s, re.IGNORECASE)
-            if sm and _scan_matching_paren(s, sm.end()) == len(s.rstrip()):
-                return sm.group(1) + s[sm.end() - 1 :]
-            return s
-
-        while j < len(sql):
-            c = sql[j]
-            if in_str:
-                buf.append(c)
-                if c == "'":
-                    in_str = False
-            elif c == "'":
-                buf.append(c)
-                in_str = True
-            elif c in "([":
-                depth += 1
-                buf.append(c)
-            elif c in ")]":
-                if depth == 0:
-                    break
-                depth -= 1
-                buf.append(c)
-            elif c == "," and depth == 0:
-                out.append(flush(buf))
-                out.append(",")
-                buf = []
-            elif depth == 0 and re.match(
-                r"(ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE|GROUP|HAVING|AS)\b",
-                sql[j:],
-                re.IGNORECASE,
-            ):
-                break
-            else:
-                buf.append(c)
-            j += 1
-        out.append(flush(buf))
-        i = j
+    lx = _lex(sql)
+    out, i = [], 0
+    for m in _VALUES_KW_RE.finditer(sql):
+        if m.start() < i:
+            continue
+        start = m.end()
+        lv, off = _lex_at(lx, start)
+        a = start - off
+        end = lv.list_end(a, _VALUES_LIST_END_RE)
+        out.append(sql[i:start])
+        cuts = [a - 1, *lv.top_level(a, end), end]
+        items = []
+        for p, q in zip(cuts, cuts[1:]):
+            item = lv.text[p + 1 : q]
+            rm = _ROW_ITEM_RE.match(lv.text, p + 1, q)
+            if rm and lv.match_paren(rm.end()) == p + 1 + len(item.rstrip()):
+                item = rm.group(1) + lv.text[rm.end() - 1 : q]
+            items.append(item)
+        out.append(",".join(items))
+        i = end + off
+    out.append(sql[i:])
+    return "".join(out)
 
 
 def _rewrite_row_constructor(sql: str) -> str:
@@ -2789,47 +2934,39 @@ def _rewrite_map_equality(sql: str) -> str:
     Both-sides-call is the provable case; map-typed columns/aliases keep
     Spark's error (documented)."""
     # NULL IS [NOT] DISTINCT FROM MAP(...) — left-NULL form
-    i = 0
     nl_re = re.compile(
         r"\bNULL\s+IS\s+(NOT\s+)?DISTINCT\s+FROM\s*", re.IGNORECASE
     )
-    while True:
-        m = nl_re.search(sql, i)
-        if not m:
-            break
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in nl_re.finditer(sql):
         m2 = _MAP_CALL_HEAD_RE.match(sql, m.end())
-        if m2 is None:
-            i = m.end()
+        if m.start() < last or m2 is None:
             continue
-        j2 = _scan_matching_paren(sql, m2.end())
+        j2 = lx.match_paren(m2.end())
         d = f"(({sql[m.end() : j2]}) IS NOT NULL)"
-        rep = f"(NOT {d})" if m.group(1) else d
-        sql = sql[: m.start()] + rep + sql[j2:]
-        i = m.start() + len(rep)
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = _MAP_CALL_HEAD_RE.search(sql, i)
-        if not m:
-            return sql
-        if mask[m.start()]:
-            i = m.end()
+        out += [sql[last : m.start()], f"(NOT {d})" if m.group(1) else d]
+        last = j2
+    out.append(sql[last:])
+    sql = "".join(out)
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_MAP_CALL_HEAD_RE, lx):
+        if m.start() < last:
             continue
-        j = _scan_matching_paren(sql, m.end())
+        j = lx.match_paren(m.end())
         om = _MAP_CMP_OP_RE.match(sql, j)
         if om is None:
-            i = m.end()
             continue
         op = " ".join(om.group(1).upper().split())
         m2 = _MAP_CALL_HEAD_RE.match(sql, om.end())
         nm2 = re.compile(r"NULL\b", re.IGNORECASE).match(sql, om.end())
         if m2 is not None:
-            j2 = _scan_matching_paren(sql, m2.end())
+            j2 = lx.match_paren(m2.end())
             b = sql[om.end() : j2]
         elif nm2 is not None and op.startswith("IS"):
             j2, b = nm2.end(), None
         else:
-            i = m.end()
             continue
         a = sql[m.start() : j]
         if op == "=":
@@ -2844,8 +2981,10 @@ def _rewrite_map_equality(sql: str) -> str:
                 else _map_distinct_expr(a, b)
             )
             rep = d if op == "IS DISTINCT FROM" else f"(NOT {d})"
-        sql = sql[: m.start()] + rep + sql[j2:]
-        i = m.start() + len(rep)
+        out += [sql[last : m.start()], rep]
+        last = j2
+    out.append(sql[last:])
+    return "".join(out)
 
 
 _ARRROW_CALL_HEAD_RE = re.compile(r"\b(array|row|struct)\s*\(", re.IGNORECASE)
@@ -2885,29 +3024,22 @@ def _rewrite_array_row_equality(sql: str) -> str:
     result NULL unless some position is definitely unequal), while Spark
     = treats NULL elements as equal values. NULL-free literals keep
     Spark's native = (same result, simpler plan)."""
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _ARRROW_CALL_HEAD_RE.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_ARRROW_CALL_HEAD_RE, lx):
+        if m.start() < last:
+            continue
+        j = lx.match_paren(m.end())
         om = _ARRROW_CMP_OP_RE.match(sql, j)
         if om is None:
-            i = m.end()
             continue
         m2 = _ARRROW_CALL_HEAD_RE.match(sql, om.end())
         kind = m.group(1).lower()
         kind2 = m2.group(1).lower() if m2 else None
         norm = {"struct": "row"}
         if m2 is None or norm.get(kind, kind) != norm.get(kind2, kind2):
-            i = m.end()
             continue
-        j2 = _scan_matching_paren(sql, m2.end())
+        j2 = lx.match_paren(m2.end())
         a, b = sql[m.start() : j], sql[om.end() : j2]
         # fire on a NULL element (three-valued semantics differ) or a
         # map-typed ROW field (Spark struct = rejects MapType members,
@@ -2919,12 +3051,10 @@ def _rewrite_array_row_equality(sql: str) -> str:
             not re.search(r"\bnull\b", a + b, re.IGNORECASE)
             and not has_map_field
         ):
-            i = m.end()
             continue
         op = om.group(1)
+        aargs, bargs = lx.args(m.end(), j - 1), lx.args(m2.end(), j2 - 1)
         if kind == "array":
-            aargs = _split_top_level(sql[m.end() : j - 1])
-            bargs = _split_top_level(sql[m2.end() : j2 - 1])
             nested = bool(aargs and bargs) and all(
                 re.match(r"(?is)^\s*array\s*\(", x) or
                 re.fullmatch(r"(?is)\s*null\s*", x)
@@ -2932,10 +3062,7 @@ def _rewrite_array_row_equality(sql: str) -> str:
             )
             eq = _array_eq_expr(a, b, nested)
         else:
-            aargs = _split_top_level(sql[m.end() : j - 1])
-            bargs = _split_top_level(sql[m2.end() : j2 - 1])
             if len(aargs) != len(bargs):
-                i = m.end()
                 continue
             eqs = [
                 f"({_map_eq_expr(x.strip(), y.strip())})"
@@ -2950,9 +3077,10 @@ def _rewrite_array_row_equality(sql: str) -> str:
                 f"(CASE WHEN {falses} THEN false"
                 f" WHEN {nulls} THEN NULL ELSE true END)"
             )
-        rep = eq if op == "=" else f"(NOT {eq})"
-        sql = sql[: m.start()] + rep + sql[j2:]
-        i = m.start() + len(rep)
+        out += [sql[last : m.start()], eq if op == "=" else f"(NOT {eq})"]
+        last = j2
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _rewrite_map_from_arrays(sql: str) -> str:
@@ -2976,36 +3104,35 @@ def _rewrite_map_from_arrays(sql: str) -> str:
 
 
 _IN_VALUES_RE = re.compile(r"\b(IN)\s*\(\s*VALUES\b", re.IGNORECASE)
+_SPACES_RE = re.compile(r"\s*")
 
 
 def _rewrite_in_values(sql: str) -> str:
     """Presto allows a bare VALUES body as the IN subquery
     (``x IN (VALUES 1, 2)``); Spark needs a SELECT wrapper."""
-    while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (c for c in _IN_VALUES_RE.finditer(sql) if not mask[c.start()]),
-            None,
-        )
-        if m is None:
-            return sql
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_IN_VALUES_RE, lx):
+        if m.start() < last:
+            continue  # nested in a rewritten list: done with it
         open_i = sql.index("(", m.end(1))
-        close_i = _scan_matching_paren(sql, open_i + 1)
+        close_i = lx.match_paren(open_i + 1)
         inner = sql[open_i + 1 : close_i - 1]
         # single-column VALUES lists project col1 by name — a bare star
         # breaks inside the projection-context IN rewrite's CASE frame.
         # Multi-column rows (tuple IN) genuinely need the star.
-        first = inner.strip()[len("VALUES") :].lstrip()
+        first = _SPACES_RE.match(sql, m.end()).end()
         proj = "col1"
-        if first.startswith("("):
-            item_end = _scan_matching_paren(first, 1)
-            if len(_split_top_level(first[1 : item_end - 1])) > 1:
+        if sql.startswith("(", first):
+            item_end = lx.match_paren(first + 1)
+            if len(lx.args(first + 1, item_end - 1)) > 1:
                 proj = "*"
-        sql = (
-            sql[: open_i]
-            + f"(SELECT {proj} FROM ({inner}))"
-            + sql[close_i:]
-        )
+        if _IN_VALUES_RE.search(inner):
+            inner = _rewrite_in_values(inner)
+        out += [sql[last:open_i], f"(SELECT {proj} FROM ({inner}))"]
+        last = close_i
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _rewrite_apply_lambda(sql: str) -> str:
@@ -3390,30 +3517,22 @@ def _fold_decimal_literal_negation(sql: str) -> str:
     re-folds via double and garbles the low digits (DO335-337,
     TestDecimalOperators). Binary minus (``a - DECIMAL '1'``) is left
     alone: only operator/keyword/start contexts are unary."""
-    pos = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _NEG_DEC_LIT_RE.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return sql
-        before = sql[: m.start()].rstrip()
+    out, last = [], 0
+    for m in _unmasked(_NEG_DEC_LIT_RE, _lex(sql)):
+        before = _text_before(sql, m.start())
         prev = before[-1:]
         unary = not prev or prev in "(,=<>+-*/%["
         if not unary and (prev.isalpha() or prev == "_"):
             w = re.search(r"[A-Za-z_]\w*$", before)
             unary = bool(w) and w.group(0).lower() in _UNARY_CTX_KW
         if not unary:
-            pos = m.end()
             continue
         body = m.group(1)
         flipped = body[1:] if body.startswith("-") else "-" + body
-        rep = f"DECIMAL '{flipped}'"
-        sql = sql[: m.start()] + rep + sql[m.end() :]
-        pos = m.start() + len(rep)
+        out += [sql[last : m.start()], f"DECIMAL '{flipped}'"]
+        last = m.end()
+    out.append(sql[last:])
+    return "".join(out)
 
 
 _INT_AFTER_DEC_RE = re.compile(
@@ -3439,23 +3558,13 @@ def _promote_int_literals_near_decimal(sql: str) -> str:
         (_INT_BEFORE_DEC_RE, lambda m: f"DECIMAL '{m.group(1)}'{m.group(2)}"),
     ):
         for _ in range(10):  # fixpoint: chains like D'a' - 5 + 3
-            pos = 0
-            changed = False
-            while True:
-                mask = _literal_mask(sql)
-                m = None
-                for cand in pat.finditer(sql, pos):
-                    if not mask[cand.start()]:
-                        m = cand
-                        break
-                if m is None:
-                    break
-                rep = grp_rep(m)
-                sql = sql[: m.start()] + rep + sql[m.end() :]
-                pos = m.start() + len(rep)
-                changed = True
-            if not changed:
+            out, last = [], 0
+            for m in _unmasked(pat, _lex(sql)):
+                out += [sql[last : m.start()], grp_rep(m)]
+                last = m.end()
+            if not out:
                 break
+            sql = "".join(out) + sql[last:]
     return sql
 
 
@@ -4362,24 +4471,17 @@ def _rewrite_scalar_compat_misc(sql: str) -> str:
         sql,
     )
     # row(...).fieldN → row(...).col{N+1}
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = _ROW_FIELD_RE.search(sql, i)
-        if not m:
-            break
-        if mask[m.start()]:
-            i = m.end()
-            continue
-        j = _scan_matching_paren(sql, m.end())
-        fm = re.match(r"\.field(\d+)\b", sql[j:])
-        if fm is None:
-            i = m.end()
-            continue
-        sql = (
-            sql[:j] + f".col{int(fm.group(1)) + 1}" + sql[j + fm.end() :]
-        )
-        i = m.end()
+    lx = _lex(sql)
+    edits = []
+    for m in _unmasked(_ROW_FIELD_RE, lx):
+        fm = _FIELD_N_RE.match(sql, lx.match_paren(m.end()))
+        if fm is not None:
+            edits.append((fm.start(), fm.end(), f".col{int(fm.group(1)) + 1}"))
+    out, last = [], 0
+    for a, b, rep in sorted(edits):
+        out += [sql[last:a], rep]
+        last = b
+    sql = "".join(out) + sql[last:]
     # general unnamed-row ordinal access after any call/subscript close
     # (legacy row field ordinal access, RowType): `).field1`,
     # `]."field1"`, chained `.field1[2].field0` — every engine-built
@@ -4393,6 +4495,8 @@ def _rewrite_scalar_compat_misc(sql: str) -> str:
         ),
     )
 
+
+_FIELD_N_RE = re.compile(r"\.field(\d+)\b")
 
 
 def _rewrite_literal_backslashes(sql: str) -> str:
@@ -4408,27 +4512,10 @@ def _rewrite_literal_backslashes(sql: str) -> str:
     Spark escape processing and must not be doubled."""
     if "\\" not in sql:
         return sql
-    out, i, n, in_str = [], 0, len(sql), False
-    while i < n:
-        c = sql[i]
-        if not in_str:
-            out.append(c)
-            if c == "'":
-                in_str = True
-            i += 1
-            continue
-        if c == "'":
-            if i + 1 < n and sql[i + 1] == "'":  # '' stays the escape
-                out.append("''")
-                i += 2
-                continue
-            in_str = False
-            out.append(c)
-            i += 1
-            continue
-        out.append("\\\\" if c == "\\" else c)
-        i += 1
-    return "".join(out)
+    return "".join(
+        chunk.replace("\\", "\\\\") if is_lit else chunk
+        for chunk, is_lit in _split_literals(sql)
+    )
 
 
 # U+001E (record separator) — a char that never appears in patterns;
@@ -4496,7 +4583,7 @@ def _rewrite_timezone_offset_fns(sql: str) -> str:
                 return None  # 1-arg session-zone form: SQL UDF handles it
             arg = args[0].strip()
             open_i = arg.index("(")
-            if _scan_matching_paren(arg, open_i + 1) != len(arg):
+            if _Lex(arg).match_paren(open_i + 1) != len(arg):
                 return None  # at_timezone(...) is a sub-expression, not the arg
             inner = arg[open_i + 1 : -1]
             parts = _split_top_level(inner)
@@ -4778,12 +4865,12 @@ def _tstz_unmark(e: str):
     """``__tstz(M, Z)`` (possibly parenthesized) → (head, M, Z), else
     None."""
     e = e.strip()
-    while e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
+    while e.startswith("(") and _Lex(e).match_paren(1) == len(e):
         e = e[1:-1].strip()
     m = _TSTZ_MARK_RE.match(e)
     if not m:
         return None
-    if _scan_matching_paren(e, m.end()) != len(e):
+    if _Lex(e).match_paren(m.end()) != len(e):
         return None
     parts = _split_top_level(e[m.end():-1])
     if len(parts) != 2:
@@ -5498,7 +5585,7 @@ def _tstz_to_millis_text(s: str) -> str:
         m = _TSTZ_MARK_RE.search(s)
         if not m:
             return s
-        j = _scan_matching_paren(s, m.end())
+        j = _Lex(s).match_paren(m.end())
         um = _tstz_unmark(s[m.start():j])
         if not um:
             return s
@@ -5786,21 +5873,13 @@ def _rewrite_orderless_agg_orderby(sql: str) -> str:
     aggregates the clause is semantically inert, so it is stripped.
     Order-SENSITIVE aggregates (array_agg, map/multimap_agg) keep their
     own ordered rewrites."""
-    pos = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _ORDERLESS_AGG_ORDERBY_RE.finditer(sql, pos)
-                if not mask[c.start()]
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
-        arg = sql[m.end() : j - 1]
+    lx = _lex(sql)
+    out, last, pos = [], 0, 0
+    for m in _unmasked(_ORDERLESS_AGG_ORDERBY_RE, lx):
+        if m.start() < pos:
+            continue
+        pos = lx.match_paren(m.end())
+        arg = sql[m.end() : pos - 1]
         # anchor on the ORDER keyword itself — the mask blanks paren
         # interiors to spaces, so a leading-\s+ pattern would match from
         # the start of a masked region and truncate the argument
@@ -5809,10 +5888,14 @@ def _rewrite_orderless_agg_orderby(sql: str) -> str:
             r"\bORDER\s+BY\s", _mask_parens_and_literals(arg), re.IGNORECASE
         )
         if om is None:
-            pos = j
             continue
-        sql = sql[: m.end()] + arg[: om.start()].strip() + sql[j - 1 :]
-        pos = m.end()
+        kept = arg[: om.start()].strip()
+        if _ORDERLESS_AGG_ORDERBY_RE.search(kept):
+            kept = _rewrite_orderless_agg_orderby(kept)
+        out += [sql[last : m.end()], kept]
+        last = pos - 1
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _cmp_chain(keys, i: int = 0) -> str:
@@ -5844,20 +5927,15 @@ def _rewrite_array_agg_ordered(sql: str) -> str:
     declaration order — and project the values back out. A trailing
     FILTER clause is folded onto the inner aggregate (it can't stay on
     the transform)."""
-    pos = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (c for c in _ARRAY_AGG_RE.finditer(sql, pos) if not mask[c.start()]),
-            None,
-        )
-        if m is None:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_ARRAY_AGG_RE, lx):
+        if m.start() < last:
+            continue
+        j = lx.match_paren(m.end())
         arg = sql[m.end() : j - 1]
         om = re.search(r"\s+ORDER\s+BY\s+", arg, re.IGNORECASE)
-        if not om or len(_split_top_level(arg[: om.start()])) != 1:
-            pos = m.end()
+        if not om or len(lx.args(m.end(), m.end() + om.start())) != 1:
             continue
         e = arg[: om.start()].strip()
         distinct = False
@@ -5873,13 +5951,12 @@ def _rewrite_array_agg_ordered(sql: str) -> str:
             # to reject, matching Presto's error.
             norm = lambda x: " ".join(x.split()).lower()  # noqa: E731
             if any(norm(k) != norm(e) for k, _, _ in keys):
-                pos = m.end()
                 continue
         end = j
         filt = ""
         fm = _FILTER_TAIL_RE.match(sql, j)
         if fm:
-            fend = _scan_matching_paren(sql, fm.end())
+            fend = lx.match_paren(fm.end())
             filt = " " + sql[j:fend].strip()
             end = fend
         # comparator sort for every form: a plain struct array_sort puts
@@ -5902,8 +5979,10 @@ def _rewrite_array_agg_ordered(sql: str) -> str:
             f"CASE WHEN size({sorted_pairs}) = 0 THEN NULL"
             f" ELSE transform({sorted_pairs}, __p -> __p.__v) END "
         )  # trailing space: source may abut the ')' (e.g. ``)FROM``)
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+        out += [sql[last : m.start()], repl]
+        last = end
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _expand_presto_aggregates(sql: str) -> str:
@@ -6224,21 +6303,15 @@ def _rewrite_regexp_replace_lambda(sql: str) -> str:
     that can match EMPTY pads the split segments Java drops at the
     boundaries (RF169-171). Residual deviation: a non-participating
     group that can also match empty stays ''."""
-    i = 0
     pat_re = re.compile(r"\bregexp_replace\s*\(", re.IGNORECASE)
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in pat_re.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
-        args = _split_top_level(sql[m.end() : j - 1])
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(pat_re, lx):
+        if m.start() < last:
+            continue
+        j = lx.match_paren(m.end())
+        args = lx.args(m.end(), j - 1)
         if len(args) != 3 or "->" not in args[2]:
-            i = m.end()
             continue
         lm = re.match(r"(?s)\s*(\w+)\s*->\s*(.*)$", args[2])
         if lm is not None and re.fullmatch(
@@ -6246,13 +6319,11 @@ def _rewrite_regexp_replace_lambda(sql: str) -> str:
         ):
             # NULL pattern with a lambda replacement → NULL (RF195;
             # Spark's regexp_replace is not higher-order)
-            rep = "CAST(NULL AS STRING)"
-            sql = sql[: m.start()] + rep + sql[j:]
-            i = m.start() + len(rep)
+            out += [sql[last : m.start()], "CAST(NULL AS STRING)"]
+            last = j
             continue
         pm = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[1])
         if lm is None or pm is None:
-            i = m.end()
             continue
         s, p = args[0].strip(), args[1].strip()
         # group scanning over the user's original text (backslash-doubling
@@ -6260,7 +6331,6 @@ def _rewrite_regexp_replace_lambda(sql: str) -> str:
         clean_pat = pm.group(1).replace("''", "'").replace("\\\\", "\\")
         gc = _regex_capture_group_count(clean_pat)
         if gc is None:
-            i = m.end()
             continue
         never_empty = _regex_groups_never_empty(clean_pat)
         try:
@@ -6303,8 +6373,10 @@ def _rewrite_regexp_replace_lambda(sql: str) -> str:
             f"(__rra, __rri) -> concat(__rra, {applied}, "
             f"element_at({segs}, __rri + 1))) END)"
         )
-        sql = sql[: m.start()] + rep + sql[j:]
-        i = m.start() + len(rep)
+        out += [sql[last : m.start()], rep]
+        last = j
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _rewrite_regex_arg_defaults(sql: str) -> str:
@@ -6399,7 +6471,8 @@ def _rewrite_regex_arg_defaults(sql: str) -> str:
 _ORDER_BY_RE = re.compile(r"\bORDER\s+BY\s+", re.IGNORECASE)
 # Words that terminate an ORDER BY item list at depth 0.
 _ORDER_CLAUSE_END = re.compile(
-    r"(LIMIT|OFFSET|FETCH|ROWS|RANGE|WINDOW|UNION|INTERSECT|EXCEPT|HAVING)\b",
+    r"(?<!\w)(LIMIT|OFFSET|FETCH|ROWS|RANGE|WINDOW|UNION|INTERSECT|EXCEPT"
+    r"|HAVING)\b",
     re.IGNORECASE,
 )
 
@@ -6410,62 +6483,24 @@ def _rewrite_order_by_nulls(sql: str) -> str:
     ascending sorts to NULLS FIRST. Append NULLS LAST to every ORDER BY
     item (top-level and window specs) that doesn't spell an explicit
     NULLS FIRST/LAST — otherwise null rows silently change position."""
-    out: list[str] = []
-    pos = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _ORDER_BY_RE.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            out.append(sql[pos:])
-            return "".join(out)
+    lx = _lex(sql)
+    out, pos = [], 0
+    for m in _unmasked(_ORDER_BY_RE, lx):
+        if m.start() < pos:
+            continue
         out.append(sql[pos : m.end()])
-        # collect item spans until clause end / unbalanced ')' / EOF
-        j = m.end()
-        depth, in_str = 0, False
-        item_start = j
-        spans: list[tuple[int, int]] = []
-        while True:
-            if j >= len(sql):
-                spans.append((item_start, j))
-                break
-            c = sql[j]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    spans.append((item_start, j))
-                    break
-                depth -= 1
-            elif depth == 0 and c == ",":
-                spans.append((item_start, j))
-                item_start = j + 1
-            elif (
-                depth == 0
-                and c.isalpha()
-                and not (sql[j - 1].isalnum() or sql[j - 1] == "_")
-                and _ORDER_CLAUSE_END.match(sql, j)
-            ):
-                spans.append((item_start, j))
-                break
-            j += 1
+        end = lx.list_end(m.end(), _ORDER_CLAUSE_END)
         pieces = []
-        for k, (a, b) in enumerate(spans):
-            item = sql[a:b]
+        for item in lx.split(m.end(), end):
             stripped = item.rstrip()
             if stripped and not re.search(r"\bNULLS\s+(FIRST|LAST)\s*$",
                                           stripped, re.IGNORECASE):
                 item = stripped + " NULLS LAST" + item[len(stripped):]
             pieces.append(item)
         out.append(",".join(pieces))
-        pos = spans[-1][1]
+        pos = end
+    out.append(sql[pos:])
+    return "".join(out)
 
 
 # Presto `/` on two integers is integer division (5/2 = 2); Spark's `/`
@@ -6662,7 +6697,7 @@ _ARITH_OPS = "+-*/%"
 def _top_level_arith_parts(e: str) -> list[str]:
     """Split on top-level binary + - * / % (literal- and paren-aware);
     unary +/- (operator-or-start preceded) do not split."""
-    mask = _literal_mask(e)
+    mask = _Lex(e).mask
     parts, depth, start, prev = [], 0, 0, ""
     i = 0
     while i < len(e):
@@ -6695,7 +6730,7 @@ def _provably_double(e: str, double_cols: frozenset) -> bool:
     if not e:
         return False
     while e.startswith("("):
-        close = _scan_matching_paren(e, 1)
+        close = _Lex(e).match_paren(1)
         if close == len(e):
             e = e[1:-1].strip()
             if not e:
@@ -6710,7 +6745,7 @@ def _provably_double(e: str, double_cols: frozenset) -> bool:
     if e[0] in "+-":
         return _provably_double(e[1:], double_cols)
     m = re.match(r"([A-Za-z_]\w*)\s*\(", e)
-    if m and _scan_matching_paren(e, m.end()) == len(e):
+    if m and _Lex(e).match_paren(m.end()) == len(e):
         fn = m.group(1).lower()
         inner = e[m.end() : -1]
         if fn in _ALWAYS_DOUBLE_FNS:
@@ -6738,20 +6773,29 @@ def _provably_double(e: str, double_cols: frozenset) -> bool:
     return bool(re.fullmatch(r"\d+(?:\.\d+)?[eE][+-]?\d+", e))
 
 
+_AS_WORD_RE = re.compile(r"\bAS\b", re.IGNORECASE)
+
+
 def _top_level_last_as(inner: str) -> int | None:
-    mask = _literal_mask(inner)
-    depth, pos = 0, None
-    for m in re.finditer(r"\(|\)|\[|\]|\bAS\b", inner, re.IGNORECASE):
-        if mask[m.start()]:
-            continue
-        tok = m.group(0)
-        if tok in "([":
-            depth += 1
-        elif tok in ")]":
-            depth -= 1
-        elif depth == 0:
+    lx, pos = _Lex(inner), None
+    for m in _unmasked(_AS_WORD_RE, lx):
+        if lx.group_depth(m.start()) == 0:
             pos = m.start()
     return pos
+
+
+_SPACED_AS_RE = re.compile(r"(?= AS )", re.IGNORECASE)
+
+
+def _cast_as_pos(inner: str) -> int:
+    """Index of the last `` AS `` outside literals at paren depth 0 of
+    ``inner`` (a CAST's argument text); -1 when there is none."""
+    lx = _Lex(inner)
+    return max(
+        (m.start() for m in _unmasked(_SPACED_AS_RE, lx)
+         if lx.paren_depth(m.start()) == 0),
+        default=-1,
+    )
 
 
 _SIMPLE_DIV_RE = re.compile(
@@ -6896,24 +6940,18 @@ def rewrite_lambda_double_casts(sql: str) -> str:
     scopes: ``transform(ARRAY[25.6E0, …], x -> CAST(x AS BIGINT))`` and
     ``apply(25.6E0, x -> …)`` round half-up like Presto
     (MathFunctions doubleToBigint), not truncate."""
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _HOF_DBL_HEAD_RE.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
-        args = _split_top_level(sql[m.end() : j - 1])
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_HOF_DBL_HEAD_RE, lx):
+        if m.start() < last:
+            continue
+        j = lx.match_paren(m.end())
+        args = lx.args(m.end(), j - 1)
         fn = m.group(1).lower()
         if fn == "map_zip_with":
             # int-literal map values → integral division inside the
             # 3-var lambda (v1/v2 is Presto integer division there)
             if len(args) != 3:
-                i = m.end()
                 continue
             lm = re.match(
                 r"(?s)\s*\(\s*(\w+)\s*,\s*(\w+)\s*,\s*(\w+)\s*\)"
@@ -6925,29 +6963,25 @@ def rewrite_lambda_double_casts(sql: str) -> str:
                 or not _int_literal_map_values(args[0])
                 or not _int_literal_map_values(args[1])
             ):
-                i = m.end()
                 continue
             v1, v2, body = lm.group(2), lm.group(3), lm.group(4)
             new_body = rewrite_integral_column_division(
                 body, frozenset({v1.lower(), v2.lower()})
             )
             if new_body == body:
-                i = m.end()
                 continue
             rep = (
                 f"{m.group(1)}({args[0]}, {args[1]}, "
                 f"({lm.group(1)}, {v1}, {v2}) -> {new_body})"
             )
-            sql = sql[: m.start()] + rep + sql[j:]
-            i = m.start() + len(rep)
+            out += [sql[last : m.start()], rep]
+            last = j
             continue
         if len(args) != 2:
-            i = m.end()
             continue
         src, lam = args[0].strip(), args[1]
         lm = re.match(r"(?s)\s*(\w+)\s*->\s*(.*)$", lam)
         if lm is None:
-            i = m.end()
             continue
         var, body = lm.group(1), lm.group(2)
         is_dbl = (
@@ -6956,17 +6990,17 @@ def rewrite_lambda_double_casts(sql: str) -> str:
             else _all_double_array_literal(src)
         )
         if not is_dbl:
-            i = m.end()
             continue
         new_body = rewrite_double_bigint_cast(
             body, frozenset({var.lower()})
         )
         if new_body == body:
-            i = m.end()
             continue
         rep = f"{m.group(1)}({src}, {var} -> {new_body})"
-        sql = sql[: m.start()] + rep + sql[j:]
-        i = m.start() + len(rep)
+        out += [sql[last : m.start()], rep]
+        last = j
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def rewrite_double_round_half_up(sql: str, double_cols: frozenset) -> str:
@@ -7028,7 +7062,7 @@ def infer_values_int_cols(sql: str) -> frozenset:
         ok = True
         for item in _split_top_level(body):
             item = re.sub(r"^\s*ROW\s*\(", "(", item, flags=re.IGNORECASE)
-            if item.startswith("(") and _scan_matching_paren(item, 1) == len(
+            if item.startswith("(") and _Lex(item).match_paren(1) == len(
                 item
             ):
                 cells = _split_top_level(item[1:-1])
@@ -7281,13 +7315,11 @@ def _fold_ts_literals_in_varchar_container_casts(sql: str) -> str:
         if len(a) != 1:
             return None
         e = a[0]
-        depth, in_str, as_pos = 0, False, -1
+        depth, as_pos, mask = 0, -1, _Lex(e).mask
         for k, c in enumerate(e):
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([<":
+            if mask[k]:
+                continue
+            if c in "([<":
                 depth += 1
             elif c in ")]>":
                 depth -= 1
@@ -7383,6 +7415,12 @@ _IVL_VALUES_ALIAS_WITH_RE = re.compile(
 _IVL_VALUES_ALIAS_INLINE_RE = re.compile(
     r"\(\s*VALUES\b", re.IGNORECASE
 )
+_IVL_INLINE_ALIAS_RE = re.compile(
+    r"\s*(?:AS\s+)?(\w+)\s*\(([^()]*)\)", re.IGNORECASE
+)
+_IVL_ROWS_END_RE = re.compile(
+    r"(?=(?:ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE)\b)", re.IGNORECASE
+)
 _IVL_ONLY_LIT_RE = re.compile(
     r"INTERVAL\s*'[^']*'\s+" + _IVL_UNIT_RANGE + r"\s*\Z", re.IGNORECASE
 )
@@ -7398,27 +7436,7 @@ _IVL_IDENT_RE = re.compile(
 def _split_top_level_on(text: str, seps: str) -> list[str]:
     """Split on top-level occurrences of any char in ``seps`` (outside
     parens/brackets and single-quoted strings)."""
-    parts, buf, depth, in_str = [], [], 0, False
-    for c in text:
-        if in_str:
-            buf.append(c)
-            in_str = c != "'"
-        elif c == "'":
-            buf.append(c)
-            in_str = True
-        elif c in "([":
-            depth += 1
-            buf.append(c)
-        elif c in ")]":
-            depth -= 1
-            buf.append(c)
-        elif depth == 0 and c in seps:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(c)
-    parts.append("".join(buf))
-    return parts
+    return _Lex(text).split(0, len(text), seps)
 
 
 def _interval_values_column_pools(sql: str) -> dict[str, str]:
@@ -7429,6 +7447,7 @@ def _interval_values_column_pools(sql: str) -> dict[str, str]:
     alias) is dropped — same statement-local-pool idiom as
     ``_provably_double``."""
     pools: dict[str, str | None] = {}
+    lx = _lex(sql)
 
     def classify_item(item: str) -> str | None:
         s = item.strip()
@@ -7445,26 +7464,8 @@ def _interval_values_column_pools(sql: str) -> dict[str, str]:
     def scan_values(start: int) -> list[str] | None:
         """From just past the VALUES keyword: per-column family over all
         rows, or None when any position mixes families/non-intervals."""
-        depth, i, in_str = 0, start, False
-        while i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and re.match(
-                r"(ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE)\b",
-                sql[i:], re.IGNORECASE,
-            ):
-                break
-            i += 1
-        rows = _split_top_level_on(sql[start:i], ",")
+        lv, off = _lex_at(lx, start)
+        rows = lv.split(start - off, lv.list_end(start - off, _IVL_ROWS_END_RE))
         fams: list[str] = []
         for row in rows:
             r = row.strip()
@@ -7506,21 +7507,7 @@ def _interval_values_column_pools(sql: str) -> dict[str, str]:
         bind(m.group(1), m.group(2), scan_values(m.end()))
     for m in _IVL_VALUES_ALIAS_INLINE_RE.finditer(sql):
         # (VALUES ...) [AS] t(a, b) — find the close paren, then alias
-        depth, i, in_str = 1, m.end(), False
-        while depth and i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
-        am = re.match(
-            r"\s*(?:AS\s+)?(\w+)\s*\(([^()]*)\)", sql[i:], re.IGNORECASE
-        )
+        am = _IVL_INLINE_ALIAS_RE.match(sql, lx.match_paren(m.end()))
         if am:
             bind(am.group(1), am.group(2), scan_values(m.end()))
     return {k: v for k, v in pools.items() if v}
@@ -7601,6 +7588,9 @@ def _provably_interval(e: str, pools: dict[str, str]) -> str | None:
     return None
 
 
+_PLAIN_CAST_OPEN_RE = re.compile(r"\bCAST\s*\(", re.IGNORECASE)
+
+
 def _rewrite_interval_varchar_casts(sql: str) -> str:
     """CAST(<provably-interval expr> AS VARCHAR) → Presto's rendering
     (IntervalDayTime.formatMillis 'D HH:MM:SS.mmm' /
@@ -7656,22 +7646,11 @@ def _rewrite_interval_varchar_casts(sql: str) -> str:
         )
 
     out, pos = [], 0
-    mask = _literal_mask(sql)
-    for m in re.finditer(r"\bCAST\s*\(", sql, re.IGNORECASE):
-        if m.start() < pos or mask[m.start()]:
+    lx = _lex(sql)
+    for m in _unmasked(_PLAIN_CAST_OPEN_RE, lx):
+        if m.start() < pos:
             continue
-        depth, i, in_str = 1, m.end(), False
-        while depth and i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
+        i = lx.match_paren(m.end())
         inner = sql[m.end() : i - 1]
         am = re.search(
             r"\s+AS\s+VARCHAR(?:\s*\(\s*\d+\s*\))?\s*\Z",
@@ -7688,22 +7667,8 @@ def _rewrite_interval_varchar_casts(sql: str) -> str:
         ) and _split_top_level_on(expr, ",") == [expr]:
             # e.g. CAST(CAST(x AS Y) AS VARCHAR): recheck that our AS is
             # the outermost by balance — expr must be paren-balanced
-            depth2 = 0
-            bal = True
-            q = False
-            for c in expr:
-                if q:
-                    q = c != "'"
-                elif c == "'":
-                    q = True
-                elif c == "(":
-                    depth2 += 1
-                elif c == ")":
-                    depth2 -= 1
-                    if depth2 < 0:
-                        bal = False
-                        break
-            if not bal or depth2 != 0:
+            depths = _Lex(expr).pdepth
+            if depths and (min(depths) < 0 or depths[-1]):
                 continue
         fam = _provably_interval(expr, pools)
         if fam is None:
@@ -7970,7 +7935,7 @@ def _ip_alias_scan(sql: str, seed=None) -> set[str]:
                 grew = True
                 continue
             em = _CAST_OPEN_RE.match(expr)
-            if em and _scan_matching_paren(expr, em.end()) == len(expr):
+            if em and _Lex(expr).match_paren(em.end()) == len(expr):
                 inner = expr[em.end() : -1]
                 ap = _top_level_last_as(inner)
                 if (
@@ -8141,19 +8106,7 @@ _QUANT_AGG = {
 
 def _scan_matching_paren(sql: str, start: int) -> int:
     """Index just past the ``)`` matching the ``(`` at start-1 (literal-aware)."""
-    depth, j, in_str = 1, start, False
-    while j < len(sql) and depth:
-        c = sql[j]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        j += 1
-    return j
+    return _lex(sql).match_paren(start)
 
 
 def _top_level_from(s: str) -> int:
@@ -8289,21 +8242,13 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
     if not re.search(r"\(\s*SELECT\b", sql, re.IGNORECASE):
         return sql
     mask = _literal_mask(sql)
-    gbs = _depth0_matches(
-        sql, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE), mask
-    )
+    gbs = _depth0_matches(sql, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE))
     if len(gbs) != 1:
         return sql
-    if _depth0_matches(
-        sql,
-        re.compile(r"\b(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE),
-        mask,
-    ):
+    if _depth0_matches(sql, re.compile(r"\b(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE)):
         return sql
     gb = gbs[0]
-    froms = _depth0_matches(
-        sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask
-    )
+    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE))
     if not froms or froms[0].start() > gb.start():
         return sql
     fm = froms[0]
@@ -8314,7 +8259,7 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
     frombody = sql[fm.end() : gb.start()]
     rest = sql[gb.end() :]
     # split the GROUP BY key list from the HAVING/ORDER/LIMIT tail
-    rmask = _literal_mask(rest)
+    rmask = _Lex(rest).mask
     depth, cut = 0, len(rest)
     tail_kw = re.compile(
         r"\b(HAVING|ORDER\s+BY|LIMIT|OFFSET|FETCH|WINDOW)\b", re.IGNORECASE
@@ -8337,7 +8282,7 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
         return sql
 
     def _has_subquery(txt: str) -> bool:
-        tm = _literal_mask(txt)
+        tm = _Lex(txt).mask
         return any(
             not tm[m.start()]
             for m in re.finditer(r"\(\s*SELECT\b", txt, re.IGNORECASE)
@@ -8367,7 +8312,7 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
             open_paren = core.index("(", im.start())
             if (
                 _GB_IN_LIT_RE.match(probe)
-                and _scan_matching_paren(core, open_paren + 1) == len(core)
+                and _Lex(core).match_paren(open_paren + 1) == len(core)
             ):
                 _hoist(core)
             continue
@@ -8375,7 +8320,7 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
         if (
             core.startswith("(")
             and re.match(r"\(\s*SELECT\b", core, re.IGNORECASE)
-            and _scan_matching_paren(core, 1) == len(core)
+            and _Lex(core).match_paren(1) == len(core)
         ):
             _hoist(core)
     if not hoists:
@@ -8586,7 +8531,7 @@ def _flat_scalar_row_arg(arg: str, scalar_cols: frozenset) -> bool:
     arrays-at-every-depth form."""
     if _JSON_ROW_REJECT_RE.search(arg):
         return False
-    mask = _literal_mask(arg)
+    mask = _Lex(arg).mask
     for m in _JSON_ARG_TOKEN_RE.finditer(arg):
         if mask[m.start()]:
             continue
@@ -8686,19 +8631,7 @@ def _parse_literal_json_value(e: str):
     mm = re.fullmatch(r"(?is)(?:TRY_)?CAST\s*\((.*)\)", e)
     if mm:
         inner = mm.group(1)
-        depth, in_str, as_pos = 0, False, -1
-        for k in range(len(inner) - 3):
-            c = inner[k]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and inner[k : k + 4].upper() == " AS ":
-                as_pos = k
+        as_pos = _cast_as_pos(inner)
         if as_pos < 0:
             raise ValueError(f"cast without AS {e!r}")
         operand = inner[:as_pos].strip()
@@ -8824,19 +8757,7 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
             return sql
         j = _scan_matching_paren(sql, m.end())
         inner = sql[m.end() : j - 1]
-        depth, in_str, as_pos = 0, False, -1
-        for k in range(len(inner) - 3):
-            c = inner[k]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and inner[k : k + 4].upper() == " AS ":
-                as_pos = k
+        as_pos = _cast_as_pos(inner)
         if as_pos < 0 or inner[as_pos + 4 :].strip().upper() != "JSON":
             i = m.end()
             continue
@@ -9130,22 +9051,7 @@ def _rewrite_json_casts(sql: str) -> str:
         j = _scan_matching_paren(sql, m.end())
         inner = sql[m.end() : j - 1]
         # last top-level " AS " splits expr from target type
-        depth, in_str, as_pos = 0, False, -1
-        for k in range(len(inner) - 3):
-            c = inner[k]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and inner[k : k + 4].upper() == " AS "
-            ):
-                as_pos = k
+        as_pos = _cast_as_pos(inner)
         if as_pos < 0:
             i = m.end()
             continue
@@ -9227,19 +9133,7 @@ def _parse_char_cast(sql: str, m) -> tuple[str, str, int, int] | None:
     (cast_keyword, operand_text, n, end_of_span); else None."""
     j = _scan_matching_paren(sql, m.end())
     inner = sql[m.end() : j - 1]
-    depth, in_str, as_pos = 0, False, -1
-    for k in range(len(inner) - 3):
-        c = inner[k]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and inner[k : k + 4].upper() == " AS ":
-            as_pos = k
+    as_pos = _cast_as_pos(inner)
     if as_pos < 0:
         return None
     tm = re.match(
@@ -9846,29 +9740,25 @@ def _rewrite_grouping_order_hoist(sql: str) -> str:
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
     mask = _literal_mask(sql)
-    obs = _depth0_matches(sql, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE), mask)
-    gbs = _depth0_matches(sql, _GB_KEYWORD_RE, mask)
+    obs = _depth0_matches(sql, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE))
+    gbs = _depth0_matches(sql, _GB_KEYWORD_RE)
     if len(obs) != 1 or len(gbs) != 1 or obs[0].start() < gbs[0].start():
         return sql
     if not any(
         gbs[0].end() <= m.start() < obs[0].start()
-        for m in _depth0_matches(sql, _GSETS_ANY_RE, mask)
+        for m in _depth0_matches(sql, _GSETS_ANY_RE)
     ):
         return sql
-    if _depth0_matches(
-        sql,
-        re.compile(r"\b(UNION|INTERSECT|EXCEPT|DISTINCT)\b", re.IGNORECASE),
-        mask,
-    ):
+    if _depth0_matches(sql, re.compile(r"\b(UNION|INTERSECT|EXCEPT|DISTINCT)\b", re.IGNORECASE)):
         return sql
-    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask)
+    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE))
     if not froms:
         return sql
     ob = obs[0]
     end_m = next(
         (
             m
-            for m in _depth0_matches(sql, _OB_CLAUSE_END_RE, mask)
+            for m in _depth0_matches(sql, _OB_CLAUSE_END_RE)
             if m.start() >= ob.end()
         ),
         None,
@@ -9955,22 +9845,10 @@ _AS_ALIAS_TAIL_RE = re.compile(r"\s+AS\s+([A-Za-z_]\w*)\s*$", re.IGNORECASE)
 _QUAL_REF_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*([A-Za-z_]\w*)\b")
 
 
-def _depth0_matches(sql: str, pat: re.Pattern, mask: list) -> list:
+def _depth0_matches(sql: str, pat: re.Pattern) -> list:
     """Matches of ``pat`` at paren depth 0, outside literals."""
-    depth = 0
-    depths = [0] * len(sql)
-    for i, c in enumerate(sql):
-        if not mask[i]:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-        depths[i] = depth
-    return [
-        m
-        for m in pat.finditer(sql)
-        if not mask[m.start()] and depths[m.start()] == 0
-    ]
+    lx = _lex(sql)
+    return [m for m in _unmasked(pat, lx) if lx.paren_depth(m.start()) == 0]
 
 
 def _rewrite_window_in_order_by(sql: str) -> str:
@@ -9987,7 +9865,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     if not re.match(r"SELECT\b", stripped, re.IGNORECASE):
         return sql
     mask = _literal_mask(sql)
-    obs = _depth0_matches(sql, _OB_RE, mask)
+    obs = _depth0_matches(sql, _OB_RE)
     if not obs:
         return sql
     ob = obs[-1]
@@ -10015,7 +9893,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     sel_m = re.match(r"\s*SELECT\s+", sql, re.IGNORECASE)
     if re.match(r"(DISTINCT|ALL)\b", sql[sel_m.end() :], re.IGNORECASE):
         return sql
-    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask)
+    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE))
     if not froms:
         return sql
     fm = froms[0]
@@ -10034,8 +9912,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
         else:
             return sql
     has_group = bool(
-        _depth0_matches(body, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE),
-                        _literal_mask(body))
+        _depth0_matches(body, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE))
     )
     lower_names = {n.lower() for n in names}
     sort_specs = []
@@ -10056,7 +9933,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
             key = f"{qm.group(1)}.{qm.group(2)}"
             return _pt.setdefault(key, f"__q_{len(_pt)}")
 
-        emask = _literal_mask(expr)
+        emask = _Lex(expr).mask
         expr = "".join(
             _thread(qm) if qm else ch
             for qm, ch in _iter_qual_subst(expr, emask)
@@ -10066,7 +9943,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
         # e.g. ORDER BY row_number() OVER (ORDER BY totalprice) with
         # only custkey selected); thread them through by name so the
         # hoisted projection over the derived table still resolves them
-        emask = _literal_mask(expr)
+        emask = _Lex(expr).mask
         esub = _subquery_mask(expr, emask)
         for im in re.finditer(r"\b[A-Za-z_]\w*\b", expr):
             if emask[im.start()] or esub[im.start()]:
@@ -10335,38 +10212,11 @@ def _fromless_parts(body: str):
     return body, None
 
 
-def _in_relation_position(sql: str, pos: int, mask: list) -> bool:
+def _in_relation_position(sql: str, pos: int) -> bool:
     """True when the paren at ``pos`` opens a derived table — directly
     after FROM/JOIN, or comma-joined inside a FROM clause (``FROM a,
-    (SELECT …) t``). Walks backwards at the same paren depth until a
-    clause keyword decides it."""
-    depth, i = 0, pos - 1
-    while i >= 0:
-        c = sql[i]
-        if not mask[i]:
-            if c == ")":
-                depth += 1
-            elif c == "(":
-                depth -= 1
-                if depth < 0:
-                    return False  # inside an expression's parens
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                j = i
-                while j >= 0 and (sql[j].isalnum() or sql[j] == "_"):
-                    j -= 1
-                w = sql[j + 1 : i + 1].upper()
-                if w in ("FROM", "JOIN"):
-                    return True
-                if w in (
-                    "SELECT", "WHERE", "ON", "HAVING", "BY", "WHEN",
-                    "THEN", "ELSE", "AND", "OR", "NOT", "IN", "EXISTS",
-                    "UNION", "INTERSECT", "EXCEPT", "VALUES", "SET",
-                ):
-                    return False
-                i = j
-                continue
-        i -= 1
-    return False
+    (SELECT …) t``)."""
+    return pos in _lex(sql).relation_parens()
 
 
 _PAREN_SEL_ANY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
@@ -10411,7 +10261,7 @@ def _collapse_trivial_subquery_wrappers(sql: str) -> str:
                 r"\s*SELECT\b", body[inner_open + 1 :], re.IGNORECASE
             ):
                 continue
-            inner_close = _scan_matching_paren(body, inner_open + 1)
+            inner_close = _Lex(body).match_paren(inner_open + 1)
             if body[inner_close:].strip():
                 continue  # alias / WHERE / anything else: not a no-op
             sql = (
@@ -10445,72 +10295,59 @@ def _rewrite_fromless_subqueries(sql: str) -> str:
     anything with FROM/set-ops are left untouched. Relation-position
     ``FROM (SELECT 1)`` is excluded by peeking at the preceding word."""
     # EXISTS first — the scalar pass below would otherwise see its paren
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _EXISTS_SEL_RE.finditer(sql, i)
-                if not mask[c.start()]
-            ),
-            None,
-        )
-        if m is None:
-            break
+    return _fold_fromless_scalars(_fold_fromless_exists(sql))
+
+
+def _fold_fromless_exists(sql: str) -> str:
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_EXISTS_SEL_RE, lx):
+        if m.start() < last:
+            continue
         open_p = sql.index("(", m.start())
-        close = _scan_matching_paren(sql, open_p + 1)
+        close = lx.match_paren(open_p + 1)
         body = sql[open_p + 1 : close - 1]
         sel = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
         parts = _fromless_parts(body[sel.end() :])
         if parts is None:
-            i = open_p + 1  # real subquery — leave for later passes
-            continue
+            continue  # real subquery — leave for later passes
         _, where = parts
         repl = "true" if where is None else f"coalesce(({where.strip()}), false)"
-        sql = sql[: m.start()] + repl + sql[close:]
-        i = m.start()
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _PAREN_SEL_RE.finditer(sql, i)
-                if not mask[c.start()]
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        before = sql[: m.start()].rstrip()
-        close_peek = _scan_matching_paren(sql, m.start() + 1)
-        after = sql[close_peek:].lstrip()
+        out += [sql[last : m.start()], _fold_fromless_exists(repl)]
+        last = close
+    out.append(sql[last:])
+    return "".join(out)
+
+
+def _fold_fromless_scalars(sql: str) -> str:
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_PAREN_SEL_RE, lx):
+        if m.start() < last:
+            continue
+        close = lx.match_paren(m.start() + 1)
         if (
             re.search(
                 # AS: CTE body (WITH a AS (SELECT …)); set-op keywords:
                 # the paren select is a compound-query branch
                 r"\b(EXISTS|IN|ALL|ANY|SOME|AS|UNION|INTERSECT|EXCEPT)$",
-                before,
+                _text_before(sql, m.start()),
                 re.IGNORECASE,
             )
-            or re.match(r"(UNION|INTERSECT|EXCEPT)\b", after, re.IGNORECASE)
-            or _in_relation_position(sql, m.start(), mask)
+            or re.match(
+                r"\s*(UNION|INTERSECT|EXCEPT)\b", sql[close:], re.IGNORECASE
+            )
+            or m.start() in lx.relation_parens()
         ):
-            # subquery-operator position / relation position — leave
-            i = m.start() + 1
-            continue
-        close = _scan_matching_paren(sql, m.start() + 1)
+            continue  # subquery-operator position / relation position
         body = sql[m.start() + 1 : close - 1]
         sel = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
         parts = _fromless_parts(body[sel.end() :])
         if parts is None:
-            i = m.start() + 1
             continue
         items_txt, where = parts
         items = _split_top_level(items_txt)
         if len(items) != 1:
-            i = m.start() + 1
             continue
         item = items[0].strip()
         am = _AS_ALIAS_TAIL_RE.search(_mask_parens_and_literals(item))
@@ -10524,15 +10361,16 @@ def _rewrite_fromless_subqueries(sql: str) -> str:
                 f" THEN 1 ELSE 0 END)"
             )
         elif _AGG_FN_RE.search(item):
-            i = m.start() + 1
             continue  # non-count aggregate over the conditional row
         else:
             repl = (
                 f"(CASE WHEN coalesce(({where.strip()}), false)"
                 f" THEN ({item}) END)"
             )
-        sql = sql[: m.start()] + repl + sql[close:]
-        i = m.start()
+        out += [sql[last : m.start()], _fold_fromless_scalars(repl)]
+        last = close
+    out.append(sql[last:])
+    return "".join(out)
 
 
 _SCALAR_CELL_RE = re.compile(
@@ -10556,35 +10394,33 @@ def _rewrite_values_scalar_lists(sql: str) -> str:
 
     All cells must be scalar literals; relation-position VALUES
     (``FROM (VALUES …)``) are untouched."""
-    changed = True
-    while changed:
-        changed = False
-        mask = _literal_mask(sql)
-        for m in _VALUES_OPEN_RE.finditer(sql):
-            p = m.start()
-            if mask[p] or _in_relation_position(sql, p, mask):
-                continue
-            close = _scan_matching_paren(sql, p + 1)
-            body = sql[p + 1 : close - 1]
-            vm = re.match(r"\s*VALUES\b", body, re.IGNORECASE)
-            cells = _split_top_level(body[vm.end() :])
-            if not all(_SCALAR_CELL_RE.fullmatch(c) for c in cells):
-                continue
-            # expression position only: the token before must be a
-            # comparison/arithmetic operator or IN. Set-op branches
-            # ('(VALUES 1) UNION ALL …'), CTE bodies, and statement-
-            # leading VALUES are relations — leave them.
-            before = sql[:p].rstrip()
-            is_in = bool(re.search(r"\bIN$", before, re.IGNORECASE))
-            if not is_in and not re.search(r"[=<>!+\-*/%]$", before):
-                continue
-            if not is_in and len(cells) != 1:
-                continue
-            lits = ", ".join(c.strip() for c in cells)
-            sql = sql[:p] + f"({lits})" + sql[close:]
-            changed = True
-            break
-    return sql
+    lx = _lex(sql)
+    out, last = [], 0
+    for m in _unmasked(_VALUES_OPEN_RE, lx):
+        p = m.start()
+        if p < last or p in lx.relation_parens():
+            continue
+        close = lx.match_paren(p + 1)
+        body = sql[p + 1 : close - 1]
+        vm = re.match(r"\s*VALUES\b", body, re.IGNORECASE)
+        cells = _split_top_level(body[vm.end() :])
+        if not all(_SCALAR_CELL_RE.fullmatch(c) for c in cells):
+            continue
+        # expression position only: the token before must be a
+        # comparison/arithmetic operator or IN. Set-op branches
+        # ('(VALUES 1) UNION ALL …'), CTE bodies, and statement-
+        # leading VALUES are relations — leave them.
+        before = _text_before(sql, p)
+        is_in = bool(re.search(r"\bIN$", before, re.IGNORECASE))
+        if not is_in and not re.search(r"[=<>!+\-*/%]$", before):
+            continue
+        if not is_in and len(cells) != 1:
+            continue
+        lits = ", ".join(c.strip() for c in cells)
+        out += [sql[last:p], f"({lits})"]
+        last = close
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _unwrap_parenthesized_joins(sql: str) -> str:
@@ -10595,23 +10431,20 @@ def _unwrap_parenthesized_joins(sql: str) -> str:
     are semantically inert when the group is unaliased, so strip them:
     relation-position parens whose content carries a depth-0 JOIN and
     whose close is not followed by an alias token."""
-    changed = True
-    while changed:
-        changed = False
-        mask = _literal_mask(sql)
-        for m in re.finditer(r"\(", sql):
-            p = m.start()
-            if mask[p] or not _in_relation_position(sql, p, mask):
-                continue
+    # one lexer per unwrap: stripping a group's parens changes which
+    # later parens of its level sit in relation position
+    while True:
+        lx = _lex(sql)
+        for p in sorted(lx.relation_parens()):
             # a group that is the RIGHT operand of a join keeps its
             # parens: stripping them re-associates the ON clauses
             # (``a LEFT JOIN (b JOIN c ON …) ON …`` would become the
             # unparseable ``a LEFT JOIN b JOIN c ON … ON …``). Left/
             # FROM-position groups are safe — joins left-associate.
-            bm = re.search(r"([A-Za-z_]\w*)\s*$", sql[:p])
+            bm = re.search(r"([A-Za-z_]\w*)$", _text_before(sql, p))
             if bm and bm.group(1).upper() == "JOIN":
                 continue
-            close = _scan_matching_paren(sql, p + 1)
+            close = lx.match_paren(p + 1)
             body = sql[p + 1 : close - 1]
             # a body that IS a query (derived table) keeps its parens —
             # its internal joins belong to the subquery, not the FROM
@@ -10619,8 +10452,7 @@ def _unwrap_parenthesized_joins(sql: str) -> str:
                 r"\s*(SELECT|VALUES|WITH|TABLE)\b", body, re.IGNORECASE
             ):
                 continue
-            bmask = _literal_mask(body)
-            if not _depth0_matches(body, _JOIN_KW_RE, bmask):
+            if not _depth0_matches(body, _JOIN_KW_RE):
                 continue
             after = sql[close:].lstrip()
             am = re.match(r"(?:AS\s+)?([A-Za-z_]\w*)", after, re.IGNORECASE)
@@ -10632,9 +10464,9 @@ def _unwrap_parenthesized_joins(sql: str) -> str:
             ):
                 continue  # aliased join group — parens are load-bearing
             sql = sql[:p] + body.strip() + sql[close:]
-            changed = True
             break
-    return sql
+        else:
+            return sql
 
 
 _ORDER_TAIL_RE = re.compile(
@@ -10667,25 +10499,19 @@ def _rewrite_order_by_subquery_hoist(sql: str) -> str:
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
     mask = _literal_mask(sql)
-    obs = _depth0_matches(
-        sql, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE), mask
-    )
+    obs = _depth0_matches(sql, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE))
     if len(obs) != 1:
         return sql
-    if _depth0_matches(
-        sql,
-        re.compile(
+    if _depth0_matches(sql, re.compile(
             r"\b(UNION|INTERSECT|EXCEPT|GROUP\s+BY|HAVING|DISTINCT)\b",
             re.IGNORECASE,
-        ),
-        mask,
-    ):
+        )):
         return sql
     ob = obs[0]
     end_m = next(
         (
             m
-            for m in _depth0_matches(sql, _OB_CLAUSE_END_RE, mask)
+            for m in _depth0_matches(sql, _OB_CLAUSE_END_RE)
             if m.start() >= ob.end()
         ),
         None,
@@ -10696,9 +10522,7 @@ def _rewrite_order_by_subquery_hoist(sql: str) -> str:
         re.search(r"\(\s*SELECT\b", it, re.IGNORECASE) for it in items
     ):
         return sql
-    froms = _depth0_matches(
-        sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask
-    )
+    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE))
     if not froms:
         return sql
     sel_m = re.match(r"\s*SELECT\s+", sql, re.IGNORECASE)
@@ -10751,7 +10575,7 @@ def _has_correlated_subquery(cond: str) -> bool:
     subquery — i.e. an outer (correlated) reference. Uncorrelated
     subqueries in join-ON are left alone: Spark executes those natively."""
     for m in _SQ_OPEN_RE.finditer(cond):
-        close = _scan_matching_paren(cond, m.start() + 1)
+        close = _Lex(cond).match_paren(m.start() + 1)
         body = cond[m.start() + 1 : close - 1]
         inner_aliases = {
             a.lower()
@@ -10773,6 +10597,9 @@ def _has_correlated_subquery(cond: str) -> bool:
     return False
 
 
+_EXISTS_OPEN_RE = re.compile(r"\bEXISTS\s*\(", re.IGNORECASE)
+
+
 def _fold_uncorrelated_exists(cond: str) -> str | None:
     """Replace each UNCORRELATED ``EXISTS (SELECT …)`` inside ``cond``
     with ``((SELECT count(*) FROM (<inner>) __ex LIMIT 1) > 0)`` — a
@@ -10784,11 +10611,9 @@ def _fold_uncorrelated_exists(cond: str) -> str | None:
     changed = True
     while changed:
         changed = False
-        mask = _literal_mask(out)
-        for m in re.finditer(r"\bEXISTS\s*\(", out, re.IGNORECASE):
-            if mask[m.start()]:
-                continue
-            close = _scan_matching_paren(out, m.end())
+        lx = _Lex(out)
+        for m in _unmasked(_EXISTS_OPEN_RE, lx):
+            close = lx.match_paren(m.end())
             inner = out[m.end() : close - 1]
             if not re.match(r"\s*SELECT\b", inner, re.IGNORECASE):
                 continue
@@ -10819,7 +10644,7 @@ def _rewrite_join_on_subquery(sql: str) -> str:
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
     mask = _literal_mask(sql)
-    for jm in _depth0_matches(sql, _JOIN_KW_RE, mask):
+    for jm in _depth0_matches(sql, _JOIN_KW_RE):
         before = sql[: jm.start()].rstrip()
         outer = bool(
             re.search(
@@ -10831,9 +10656,7 @@ def _rewrite_join_on_subquery(sql: str) -> str:
         on_m = next(
             (
                 m
-                for m in _depth0_matches(
-                    sql, re.compile(r"\bON\b", re.IGNORECASE), mask
-                )
+                for m in _depth0_matches(sql, re.compile(r"\bON\b", re.IGNORECASE))
                 if m.start() >= jm.end()
             ),
             None,
@@ -10846,15 +10669,13 @@ def _rewrite_join_on_subquery(sql: str) -> str:
         # later join, which the loop will visit on its own
         between = sql[jm.end() : on_m.start()]
         bmask = mask[jm.end() : on_m.start()]
-        if _depth0_matches(
-            between, re.compile(r"\bUSING\b", re.IGNORECASE), bmask
-        ) or _depth0_matches(between, _JOIN_KW_RE, bmask):
+        if _depth0_matches(between, re.compile(r"\bUSING\b", re.IGNORECASE)) or _depth0_matches(between, _JOIN_KW_RE):
             continue
         on_start = on_m.end()
         end_m = next(
             (
                 m
-                for m in _depth0_matches(sql, _ON_CLAUSE_END_RE, mask)
+                for m in _depth0_matches(sql, _ON_CLAUSE_END_RE)
                 if m.start() >= on_start
             ),
             None,
@@ -10891,8 +10712,8 @@ def _rewrite_join_on_subquery(sql: str) -> str:
         ).strip()
         # insert at the statement's WHERE position — after the whole
         # FROM clause (which may contain further joins)
-        rmask = _literal_mask(removed)
-        tm = next(iter(_depth0_matches(removed, _STMT_TAIL_KW_RE, rmask)),
+        rmask = _Lex(removed).mask
+        tm = next(iter(_depth0_matches(removed, _STMT_TAIL_KW_RE)),
                   None)
         if tm is None:
             new = f"{removed} WHERE {cond}"
@@ -10994,7 +10815,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
             if am.start() < pos:
                 continue
             resid.append(having_txt[pos : am.start()])
-            pos = _scan_matching_paren(having_txt, am.end())
+            pos = _Lex(having_txt).match_paren(am.end())
         resid.append(having_txt[pos:])
         if any(
             t.group(0).lower() not in _EGG_HAVING_OK
@@ -11008,7 +10829,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
     )
     if cm is None:
         return sql
-    close = _scan_matching_paren(gb_txt, cm.end())
+    close = _Lex(gb_txt).match_paren(cm.end())
     if gb_txt[close:].strip():
         return sql
     inner = gb_txt[cm.end() : close - 1]
@@ -11036,7 +10857,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
     def _strip_outer(e: str) -> str:
         # '(CASE .. END)' select item vs 'CASE .. END' grouping entry
         e = e.strip()
-        while e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
+        while e.startswith("(") and _Lex(e).match_paren(1) == len(e):
             e = e[1:-1].strip()
         return e
 
@@ -11053,7 +10874,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
             # grouping()/grouping_id() over grouping columns is a
             # compile-time constant on the global set: every argument is
             # un-grouped there, so the mask is all-ones (2^nargs - 1)
-            close = _scan_matching_paren(expr, gm.end())
+            close = _Lex(expr).match_paren(gm.end())
             gargs = _split_top_level(expr[gm.end() : close - 1])
             if (
                 expr[close:].strip()
@@ -11198,7 +11019,7 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
     ``a`` — syntactic recursion over constructor forms, catalog-type
     dispatch for leaves. None when the type cannot be derived."""
     a = a.strip()
-    while a.startswith("(") and _scan_matching_paren(a, 1) == len(a):
+    while a.startswith("(") and _Lex(a).match_paren(1) == len(a):
         a = a[1:-1].strip()
     # ARRAY[e1, e2, ...] constructor: sum of element sizes
     m = re.match(r"(?is)^ARRAY\s*\[", a)
@@ -11211,7 +11032,7 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
     # map(ARRAY[...], ARRAY[...]) / ROW(...) constructors
     for fname in ("map", "row"):
         m = re.match(rf"(?is)^{fname}\s*\(", a)
-        if m and _scan_matching_paren(a, m.end()) == len(a):
+        if m and _Lex(a).match_paren(m.end()) == len(a):
             parts = [
                 _ds_expr(e, col_types)
                 for e in _split_top_level(a[m.end():-1])
@@ -11221,7 +11042,7 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
             return None
     # IF(cond, a, b): size follows the taken branch (NULL branch → 0)
     m = re.match(r"(?is)^IF\s*\(", a)
-    if m and _scan_matching_paren(a, m.end()) == len(a):
+    if m and _Lex(a).match_paren(m.end()) == len(a):
         parts = _split_top_level(a[m.end():-1])
         if len(parts) == 3:
             da = _ds_expr(parts[1], col_types)
@@ -11231,7 +11052,7 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
         return None
     # CAST(x AS T): dispatch on the declared target type
     m = re.match(r"(?is)^(?:TRY_)?CAST\s*\(", a)
-    if m and _scan_matching_paren(a, m.end()) == len(a):
+    if m and _Lex(a).match_paren(m.end()) == len(a):
         tm = re.search(
             r"(?is)\bAS\s+([A-Za-z_]+)\s*(?:\(\s*(\d+)[^)]*\))?\s*\)$", a
         )
