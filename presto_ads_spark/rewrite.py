@@ -153,6 +153,8 @@ def _rewrite_bare_time_keywords(chunk: str) -> str:
 # unterminated one runs to the end of the text.
 _LEX_LITERAL_RE = re.compile(r"'[^']*'?")
 _LEX_STRUCT_RE = re.compile(r"[()\[\],]")
+_LEX_PAREN_TOKEN_RE = re.compile(r"'[^']*'?|[()]")
+_SPACES_RE = re.compile(r"\s*")
 # clause keywords that decide whether a '(' opens a FROM item; a word
 # reads up to its last letter, so ``from2`` counts as FROM
 _RELATION_KEYWORDS = {
@@ -265,7 +267,12 @@ class _Lex:
         sql = self.text
         if start and sql[start - 1] == "(" and not self.mask[start - 1]:
             return self.close.get(start - 1, len(sql))
-        return _Lex("(" + sql[start:]).match_paren(1) - 1 + start
+        depth = 1
+        for t in _LEX_PAREN_TOKEN_RE.finditer(sql, start):
+            depth += {"(": 1, ")": -1}.get(t.group(), 0)
+            if not depth:
+                return t.end()
+        return len(sql)
 
     def group_end(self, a: int) -> int:
         """Index of the first ``)``/``]`` from ``a`` on that closes a
@@ -316,6 +323,10 @@ class _Lex:
     def args(self, a: int, b: int) -> list[str]:
         """The stripped, non-empty top-level comma items of sql[a:b]."""
         return [x for x in (x.strip() for x in self.split(a, b)) if x]
+
+    def literal_end(self, a: int) -> int:
+        """End of the literal run that opens at ``a``."""
+        return self.literals[bisect_left(self.literals, (a, -1))][1]
 
     def in_literal(self, a: int, b: int) -> list[tuple[int, int]]:
         """The literal runs inside [a, b) — none straddles an end when
@@ -1124,7 +1135,9 @@ def _rewrite_array_literals(sql: str) -> str:
             break
         done += [sql[last : tail.start()], "array("]
         sql = sql[tail.end() : -1] + ")"
-    return re.sub(r"\bMAP\s*\(\s*array\(", "map_from_arrays(array(", "".join(done))
+    return re.sub(
+        r"\bMAP\s*\(\s*array\(", "map_from_arrays(array(", "".join(done)
+    )
 
 
 _SCALAR_LIT_ITEM_RE = re.compile(
@@ -1327,6 +1340,9 @@ def _concat_operand_right(sql: str, mask, k: int):
     return None
 
 
+_LBRACKET_RE = re.compile(r"\[")
+
+
 def _rewrite_subscripts(sql: str) -> str:
     """Presto subscript ``x[e]`` is 1-based on arrays and key-lookup on maps
     (SqlBase.g4 subscript; InterpretedFunctionInvoker) — Spark's ``[]`` is
@@ -1335,41 +1351,21 @@ def _rewrite_subscripts(sql: str) -> str:
     pass turns it into try_element_at: NULL instead of an error on
     out-of-bounds — documented deviation). Chained subscripts resolve over
     successive passes."""
-    guard = 0
-    while guard < 32:
-        guard += 1
-        mask = _literal_mask(sql)
-        done = True
-        i = 0
-        while i < len(sql):
-            if sql[i] == "[" and not mask[i]:
-                start = _expr_start(sql, mask, i)
-                if start is not None and not sql[: i].rstrip().upper().endswith(
-                    "ARRAY"
-                ):
-                    depth, j, in_str = 1, i + 1, False
-                    while j < len(sql) and depth:
-                        c = sql[j]
-                        if in_str:
-                            in_str = c != "'"
-                        elif c == "'":
-                            in_str = True
-                        elif c == "[":
-                            depth += 1
-                        elif c == "]":
-                            depth -= 1
-                        j += 1
-                    base = sql[start:i].rstrip()
-                    inner = sql[i + 1 : j - 1]
-                    sql = (
-                        sql[:start]
-                        + f"element_at({base}, {inner})"
-                        + sql[j:]
-                    )
-                    done = False
-                    break
-            i += 1
-        if done:
+    # one subscript per round: a rewritten base or index may hold the
+    # next one (at most 32 rounds)
+    for _ in range(32):
+        lx = _lex(sql)
+        for m in _unmasked(_LBRACKET_RE, lx):
+            i = m.start()
+            start = _expr_start(sql, lx.mask, i)
+            if start is None or _text_before(sql, i).upper().endswith("ARRAY"):
+                continue
+            j = lx.bclose.get(i, len(sql))
+            base = sql[start:i].rstrip()
+            inner = sql[i + 1 : j - 1]
+            sql = f"{sql[:start]}element_at({base}, {inner}){sql[j:]}"
+            break
+        else:
             return sql
     return sql
 
@@ -1379,45 +1375,36 @@ _AT_TZ_RE = re.compile(r"\bAT\s+TIME\s+ZONE\s+", re.IGNORECASE)
 
 def _rewrite_at_time_zone(sql: str) -> str:
     """``expr AT TIME ZONE 'zone'`` (SqlBase.g4 AT_TIME_ZONE; desugared by
-    DesugarAtTimeZone.java) → at_timezone(expr, 'zone') compat function."""
+    DesugarAtTimeZone.java) → at_timezone(expr, 'zone') compat function.
+    A round rewrites every occurrence up to the first whose operand
+    starts at or before the previous rewrite's end (a chain such as
+    ``x AT TIME ZONE 'a' AT TIME ZONE 'b'``); that one waits for the next
+    round's text."""
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _AT_TZ_RE.finditer(sql):
-            if not mask[cand.start()]:
-                m = cand
+        lx = _lex(sql)
+        out, last = [], 0
+        for m in _unmasked(_AT_TZ_RE, lx):
+            start = _expr_start(sql, lx.mask, m.start())
+            if start is None:
+                return "".join(out) + sql[last:]
+            if out and start <= last:
                 break
-        if m is None:
-            return sql
-        start = _expr_start(sql, mask, m.start())
-        if start is None:
-            return sql
-        j = m.end()
-        while j < len(sql) and sql[j].isspace():
-            j += 1
-        im = re.match(
-            r"(?is)INTERVAL\s*'(?:[^']|'')*'\s+" + _IVL_UNIT_RANGE,
-            sql[j:],
-        )
-        if im:  # interval-typed zone offset (at_timezone overloads)
-            k = j + im.end()
-        elif j < len(sql) and sql[j] == "'":  # zone string literal
-            k = j + 1
-            while k < len(sql):
-                if sql[k] == "'":
+            j = _SPACES_RE.match(sql, m.end()).end()
+            im = _AT_TZ_INTERVAL_RE.match(sql, j)
+            if im:  # interval-typed zone offset (at_timezone overloads)
+                k = im.end()
+            elif sql.startswith("'", j):  # zone string literal
+                k = lx.literal_end(j)
+            else:  # identifier/expression zone
+                k = j
+                while k < len(sql) and (sql[k].isalnum() or sql[k] in "_."):
                     k += 1
-                    if k < len(sql) and sql[k] == "'":
-                        k += 1
-                        continue
-                    break
-                k += 1
-        else:  # identifier/expression zone
-            k = j
-            while k < len(sql) and (sql[k].isalnum() or sql[k] in "_."):
-                k += 1
-        expr = sql[start : m.start()].rstrip()
-        zone = sql[j:k]
-        sql = sql[:start] + f"at_timezone({expr}, {zone})" + sql[k:]
+            expr = sql[start : m.start()].rstrip()
+            out += [sql[last:start], f"at_timezone({expr}, {sql[j:k]})"]
+            last = k
+        else:
+            return "".join(out) + sql[last:]
+        sql = "".join(out) + sql[last:]
 
 
 def _split_top_level(s: str) -> list[str]:
@@ -3104,7 +3091,6 @@ def _rewrite_map_from_arrays(sql: str) -> str:
 
 
 _IN_VALUES_RE = re.compile(r"\b(IN)\s*\(\s*VALUES\b", re.IGNORECASE)
-_SPACES_RE = re.compile(r"\s*")
 
 
 def _rewrite_in_values(sql: str) -> str:
@@ -7135,6 +7121,10 @@ _IVL_UNIT_RANGE = (
     r"|HOUR\s+TO\s+(?:MINUTE|SECOND)|MINUTE\s+TO\s+SECOND"
     r"|YEAR|MONTH|DAY|HOUR|MINUTE|SECOND)"
 )
+_AT_TZ_INTERVAL_RE = re.compile(
+    r"INTERVAL\s*'(?:[^']|'')*'\s+" + _IVL_UNIT_RANGE,
+    re.IGNORECASE | re.DOTALL,
+)
 
 
 def _rewrite_time_literals(sql: str) -> str:
@@ -7465,7 +7455,8 @@ def _interval_values_column_pools(sql: str) -> dict[str, str]:
         """From just past the VALUES keyword: per-column family over all
         rows, or None when any position mixes families/non-intervals."""
         lv, off = _lex_at(lx, start)
-        rows = lv.split(start - off, lv.list_end(start - off, _IVL_ROWS_END_RE))
+        a = start - off
+        rows = lv.split(a, lv.list_end(a, _IVL_ROWS_END_RE))
         fams: list[str] = []
         for row in rows:
             r = row.strip()
@@ -8109,28 +8100,17 @@ def _scan_matching_paren(sql: str, start: int) -> int:
     return _lex(sql).match_paren(start)
 
 
+_FROM_WORD_RE = re.compile(r"(?<!\w)FROM(?!\w)", re.IGNORECASE)
+
+
 def _top_level_from(s: str) -> int:
     """Position of the subquery's own FROM (depth 0, outside literals)."""
-    depth, in_str, i = 0, False, 0
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and s[i : i + 4].upper() == "FROM"
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (i + 4 >= len(s) or not (s[i + 4].isalnum() or s[i + 4] == "_"))
-        ):
-            return i
-        i += 1
-    return -1
+    lx = _Lex(s)
+    return next(
+        (m.start() for m in _unmasked(_FROM_WORD_RE, lx)
+         if lx.paren_depth(m.start()) == 0),
+        -1,
+    )
 
 
 def _split_subquery(inner: str) -> tuple[str, str] | None:
@@ -8173,43 +8153,44 @@ def _uniq() -> int:
     return _uniq_counter[0]
 
 
+_PROJECTION_END_RE = re.compile(
+    r"\b(WHERE|GROUP|HAVING|ORDER|UNION|EXCEPT|INTERSECT|LIMIT)\b",
+    re.IGNORECASE,
+)
+
+
 def _projection_zones(sql: str) -> list[tuple[int, int]]:
     """[start, end) spans between each SELECT keyword and its own top-level
     FROM — the SELECT-list zones where Spark's ExistenceJoin flattens the
     three-valued IN result to TRUE/FALSE."""
-    mask = _literal_mask(sql)
+    lx = _lex(sql)
+    froms: dict[int, list[int]] = {}  # paren depth → its FROM positions
+    for m in _unmasked(_FROM_WORD_RE, lx):
+        froms.setdefault(lx.paren_depth(m.start()), []).append(m.start())
     zones = []
-    clause_re = re.compile(
-        r"\b(WHERE|GROUP|HAVING|ORDER|UNION|EXCEPT|INTERSECT|LIMIT)\b",
-        re.IGNORECASE,
-    )
-    for m in re.finditer(r"\bSELECT\b", sql, re.IGNORECASE):
-        if mask[m.start()]:
+    for m in _unmasked(_SELECT_KW_RE, lx):
+        depth = lx.paren_depth(m.start())
+        at = froms.get(depth, [])
+        k = bisect_left(at, m.end())
+        if k < len(at):
+            zones.append((m.end(), at[k]))
             continue
-        body = sql[m.end():]
-        f = _top_level_from(body)
-        if f < 0:
-            # FROM-less SELECT (e.g. a CTE body ``SELECT 1 WHERE FALSE``):
-            # the projection ends at the first depth-0 clause keyword or
-            # when the enclosing paren closes — NOT at end-of-string
-            f = len(body)
-            depth, in_str = 0, False
-            for k, c in enumerate(body):
-                if in_str:
-                    in_str = c != "'"
-                elif c == "'":
-                    in_str = True
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth < 0:
-                        f = k
-                        break
-                elif depth == 0 and clause_re.match(body, k):
-                    f = k
-                    break
-        zones.append((m.end(), m.end() + f))
+        # FROM-less SELECT (e.g. a CTE body ``SELECT 1 WHERE FALSE``):
+        # the projection ends at the first depth-0 clause keyword or
+        # when the enclosing paren closes — NOT at end-of-string
+        end = len(sql)
+        p = bisect_left(lx.parens, m.end())
+        for q, d in zip(lx.parens[p:], lx.pdepth[p:]):
+            if d < depth:
+                end = q
+                break
+        for c in _unmasked(_PROJECTION_END_RE, lx, m.end()):
+            if c.start() >= end:
+                break
+            if lx.paren_depth(c.start()) == depth:
+                end = c.start()
+                break
+        zones.append((m.end(), end))
     return zones
 
 
@@ -8245,7 +8226,9 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
     gbs = _depth0_matches(sql, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE))
     if len(gbs) != 1:
         return sql
-    if _depth0_matches(sql, re.compile(r"\b(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE)):
+    if _depth0_matches(
+        sql, re.compile(r"\b(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE)
+    ):
         return sql
     gb = gbs[0]
     froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE))
@@ -9749,7 +9732,10 @@ def _rewrite_grouping_order_hoist(sql: str) -> str:
         for m in _depth0_matches(sql, _GSETS_ANY_RE)
     ):
         return sql
-    if _depth0_matches(sql, re.compile(r"\b(UNION|INTERSECT|EXCEPT|DISTINCT)\b", re.IGNORECASE)):
+    if _depth0_matches(
+        sql,
+        re.compile(r"\b(UNION|INTERSECT|EXCEPT|DISTINCT)\b", re.IGNORECASE),
+    ):
         return sql
     froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE))
     if not froms:
@@ -10656,7 +10642,9 @@ def _rewrite_join_on_subquery(sql: str) -> str:
         on_m = next(
             (
                 m
-                for m in _depth0_matches(sql, re.compile(r"\bON\b", re.IGNORECASE))
+                for m in _depth0_matches(
+                    sql, re.compile(r"\bON\b", re.IGNORECASE)
+                )
                 if m.start() >= jm.end()
             ),
             None,
@@ -10669,7 +10657,9 @@ def _rewrite_join_on_subquery(sql: str) -> str:
         # later join, which the loop will visit on its own
         between = sql[jm.end() : on_m.start()]
         bmask = mask[jm.end() : on_m.start()]
-        if _depth0_matches(between, re.compile(r"\bUSING\b", re.IGNORECASE)) or _depth0_matches(between, _JOIN_KW_RE):
+        if _depth0_matches(
+            between, re.compile(r"\bUSING\b", re.IGNORECASE)
+        ) or _depth0_matches(between, _JOIN_KW_RE):
             continue
         on_start = on_m.end()
         end_m = next(
@@ -10987,24 +10977,6 @@ def _ds_of_type(e: str, t: str, depth: int = 0) -> str | None:
     return None
 
 
-def _ds_scan_bracket(s: str, start: int) -> int:
-    """Index just past the ``]`` matching the ``[`` at start-1
-    (literal- and paren-aware)."""
-    depth, j, in_str = 1, start, False
-    while j < len(s) and depth:
-        c = s[j]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        j += 1
-    return j
-
-
 _DS_CAST_TYPE_MAP = {
     "varbinary": "binary", "boolean": "boolean", "tinyint": "tinyint",
     "smallint": "smallint", "integer": "int", "int": "int",
@@ -11023,7 +10995,8 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
         a = a[1:-1].strip()
     # ARRAY[e1, e2, ...] constructor: sum of element sizes
     m = re.match(r"(?is)^ARRAY\s*\[", a)
-    if m and _ds_scan_bracket(a, m.end()) == len(a):
+    # the '[' closes at the end of ``a`` (or nowhere)
+    if m and _Lex(a).group_end(m.end()) >= len(a) - 1:
         elems = _split_top_level(a[m.end():-1])
         parts = [_ds_expr(e, col_types) for e in elems]
         if all(p is not None for p in parts):
