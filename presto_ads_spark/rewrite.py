@@ -3110,7 +3110,8 @@ def _rewrite_in_values(sql: str) -> str:
         first = _SPACES_RE.match(sql, m.end()).end()
         proj = "col1"
         if sql.startswith("(", first):
-            item_end = lx.match_paren(first + 1)
+            inner_end = open_i + 1 + len(inner.rstrip())
+            item_end = min(lx.match_paren(first + 1), inner_end)
             if len(lx.args(first + 1, item_end - 1)) > 1:
                 proj = "*"
         if _IN_VALUES_RE.search(inner):
@@ -8342,6 +8343,11 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
     )
 
 
+_CLOSE_IS_NULL_RE = re.compile(
+    r"\s*\)\s*IS\s+(NOT\s+)?NULL", re.IGNORECASE | re.DOTALL
+)
+
+
 def _rewrite_projected_in_subquery(sql: str) -> str:
     """3VL-correct ``[NOT] IN (SELECT …)`` in PROJECTION context.
 
@@ -8358,13 +8364,12 @@ def _rewrite_projected_in_subquery(sql: str) -> str:
            WHEN x IS NULL OR S has NULL THEN NULL
            ELSE FALSE END             (negated for NOT IN)
     """
+    # one rewrite per round: the CASE form adds SELECTs of its own
     while True:
         zones = _projection_zones(sql)
-        mask = _literal_mask(sql)
+        lx = _lex(sql)
         target = None
-        for m in _IN_SUBQ_RE.finditer(sql):
-            if mask[m.start()]:
-                continue
+        for m in _unmasked(_IN_SUBQ_RE, lx):
             if any(a <= m.start() < b for a, b in zones):
                 target = m
                 break
@@ -8374,24 +8379,17 @@ def _rewrite_projected_in_subquery(sql: str) -> str:
             # (AbstractTestDistributedQueries testDelete SemiJoin null
             # handling). A false positive (wrapping paren not the IN's)
             # is safe — the CASE form is equivalent in any context.
-            try:
-                op = sql.index("(", m.start(), m.end())
-                jj = _scan_matching_paren(sql, op + 1)
-            except ValueError:
-                continue
-            after = sql[jj:].lstrip()
-            if after.startswith(")") and re.match(
-                r"(?is)\s*IS\s+(NOT\s+)?NULL", after[1:]
-            ):
+            op = sql.find("(", m.start(), m.end())
+            if op >= 0 and _CLOSE_IS_NULL_RE.match(sql, lx.match_paren(op + 1)):
                 target = m
                 break
         if target is None:
             return sql
         open_paren = sql.index("(", target.start(), target.end())
         # scan to the matching ')' of the IN-list paren
-        j = _scan_matching_paren(sql, open_paren + 1)
+        j = lx.match_paren(open_paren + 1)
         inner = sql[open_paren + 1 : j - 1].strip()
-        estart = _expr_start(sql, mask, target.start())
+        estart = _expr_start(sql, lx.mask, target.start())
         if estart is None or inner[:6].upper() != "SELECT":
             # unsupported shape — leave untouched (bail out entirely to
             # avoid an infinite loop)
@@ -9553,6 +9551,11 @@ _FRAME_TAIL_RE = re.compile(
 )
 
 
+_OVER_OPEN_RE = re.compile(
+    r"\s*(?:IGNORE\s+NULLS\s*)?OVER\s*\(", re.IGNORECASE
+)
+
+
 def _rewrite_frameless_window_frames(sql: str) -> str:
     """Strip frame clauses from frame-ignoring window functions — except
     first_value/last_value, where the frame is MEANINGFUL in Spark and
@@ -9562,36 +9565,34 @@ def _rewrite_frameless_window_frames(sql: str) -> str:
         "lead", "lag", "rank", "dense_rank", "percent_rank",
         "row_number", "ntile", "cume_dist",
     }
-    pos = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _FRAMELESS_OVER_RE.finditer(sql, pos)
-                if not mask[c.start()] and c.group(1).lower() in strip_for
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        call_end = _scan_matching_paren(sql, m.end())
-        om = re.match(r"\s*(?:IGNORE\s+NULLS\s*)?OVER\s*\(", sql[call_end:],
-                      re.IGNORECASE)
-        if not om:
-            pos = call_end
+    lx = _lex(sql)
+    out, last, pos = [], 0, 0
+    for m in _unmasked(_FRAMELESS_OVER_RE, lx):
+        if m.start() < pos or m.group(1).lower() not in strip_for:
             continue
-        span_start = call_end + om.end()
-        span_end = _scan_matching_paren(sql, span_start)
-        spec = sql[span_start : span_end - 1]
-        new_spec = _FRAME_TAIL_RE.sub("", spec)
-        sql = sql[:span_start] + new_spec + sql[span_end - 1 :]
-        pos = span_start + len(new_spec) + 1
+        pos = lx.match_paren(m.end())
+        om = _OVER_OPEN_RE.match(sql, pos)
+        if not om:
+            continue
+        span_end = lx.match_paren(om.end())
+        spec = sql[om.end() : span_end - 1]
+        out += [sql[last : om.end()], _FRAME_TAIL_RE.sub("", spec)]
+        last, pos = span_end - 1, span_end
+    out.append(sql[last:])
+    return "".join(out)
 
 
 _GROUPING_CALL_RE = re.compile(r"\bGROUPING\s*\(", re.IGNORECASE)
 _GSETS_ANY_RE = re.compile(
     r"\bGROUPING\s+SETS\b|\bROLLUP\b|\bCUBE\b", re.IGNORECASE
+)
+
+
+_GROUP_BY_RE = re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE)
+_GROUP_BY_END_RE = re.compile(
+    r"(?=(?:HAVING|ORDER|LIMIT|OFFSET|FETCH|UNION|INTERSECT|EXCEPT|WINDOW)"
+    r"\b)",
+    re.IGNORECASE,
 )
 
 
@@ -9606,16 +9607,16 @@ def _rewrite_plain_grouping(sql: str) -> str:
     folds exactly where Presto's rewrite applies and nowhere else."""
     if not _GROUPING_CALL_RE.search(sql):
         return sql
-    mask = _literal_mask(sql)
-    out, i = [], 0
-    while i < len(sql):
-        if sql[i] == "(" and not mask[i]:
-            j = _scan_matching_paren(sql, i + 1)
-            out.append("(" + _rewrite_plain_grouping(sql[i + 1 : j - 1]) + ")")
-            i = j
-        else:
-            out.append(sql[i])
-            i += 1
+    lx = _lex(sql)
+    out, last = [], 0
+    for p in lx.parens:
+        if p < last or sql[p] != "(":
+            continue
+        j = lx.match_paren(p + 1)
+        inner = _rewrite_plain_grouping(sql[p + 1 : j - 1])
+        out += [sql[last:p], f"({inner})"]
+        last = j
+    out.append(sql[last:])
     return _plain_grouping_one_scope("".join(out))
 
 
@@ -9630,67 +9631,45 @@ def _plain_grouping_one_scope(sql: str) -> str:
     invisible here (they were already handled by their own scope)."""
     if not _GROUPING_CALL_RE.search(sql):
         return sql
-    _pg_mask = _literal_mask(sql)
-    _pg_sub = _subquery_mask(sql, _pg_mask)
-    if any(
-        not _pg_sub[m.start()] and not _pg_mask[m.start()]
-        for m in _GSETS_ANY_RE.finditer(sql)
-    ):
+    lx = _lex(sql)
+    sub = _subquery_mask(sql)
+    if any(not sub[m.start()] for m in _unmasked(_GSETS_ANY_RE, lx)):
         return sql  # the outer query itself uses grouping sets
 
-    def _group_exprs() -> set[str]:
-        mask = _literal_mask(sql)
-        sub = _subquery_mask(sql, mask)
-        out: set[str] = set()
-        for gm in re.finditer(r"\bGROUP\s+BY\b", sql, re.IGNORECASE):
-            if mask[gm.start()] or sub[gm.start()]:
-                continue
-            depth, j = 0, gm.end()
-            while j < len(sql):
-                c = sql[j]
-                if not mask[j]:
-                    if c == "(":
-                        depth += 1
-                    elif c == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif depth == 0 and re.match(
-                        r"(HAVING|ORDER|LIMIT|OFFSET|FETCH|UNION|"
-                        r"INTERSECT|EXCEPT|WINDOW)\b",
-                        sql[j:],
-                        re.IGNORECASE,
-                    ):
-                        break
-                j += 1
-            out.update(
-                " ".join(e.split()).lower()
-                for e in _split_top_level(sql[gm.end() : j])
-            )
-        return out
-
-    grouped = _group_exprs()
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        sub = _subquery_mask(sql, mask)
-        m = next(
-            (
-                c
-                for c in _GROUPING_CALL_RE.finditer(sql, i)
-                if not mask[c.start()] and not sub[c.start()]
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        end = _scan_matching_paren(sql, m.end())
-        args = _split_top_level(sql[m.end() : end - 1])
+    grouped: set[str] = set()
+    for gm in _unmasked(_GROUP_BY_RE, lx):
+        if sub[gm.start()]:
+            continue
+        # the key list ends at an unbalanced ')', a clause keyword at
+        # its own depth, or the end of the text
+        end = len(sql)
+        depth = lx.paren_depth(gm.start())
+        k = bisect_left(lx.parens, gm.end())
+        for q, d in zip(lx.parens[k:], lx.pdepth[k:]):
+            if d < depth:
+                end = q
+                break
+        for c in _unmasked(_GROUP_BY_END_RE, lx, gm.end()):
+            if c.start() >= end:
+                break
+            if lx.paren_depth(c.start()) == depth:
+                end = c.start()
+                break
+        grouped.update(" ".join(e.split()).lower()
+                       for e in lx.args(gm.end(), end))
+    out, last, pos = [], 0, 0
+    for m in _unmasked(_GROUPING_CALL_RE, lx):
+        # a folded call leaves '0' just before the next: no \b, no match
+        if m.start() < pos or sub[m.start()] or (out and m.start() == last):
+            continue
+        pos = lx.match_paren(m.end())
+        args = lx.args(m.end(), pos - 1)
         if args and all(" ".join(a.split()).lower() in grouped for a in args):
-            sql = sql[: m.start()] + "0" + sql[end:]
-            i = m.start() + 1
-        else:
-            i = end  # not a grouping column — leave for the analyzer
+            out += [sql[last : m.start()], "0"]
+            last = pos
+        # else: not a grouping column — leave it for the analyzer
+    out.append(sql[last:])
+    return "".join(out)
 
 
 _GOB_CHAIN_RE = re.compile(r"[A-Za-z_]\w*(?:\s*\.\s*[A-Za-z_]\w*)*")
@@ -9930,7 +9909,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
         # only custkey selected); thread them through by name so the
         # hoisted projection over the derived table still resolves them
         emask = _Lex(expr).mask
-        esub = _subquery_mask(expr, emask)
+        esub = _subquery_mask(expr)
         for im in re.finditer(r"\b[A-Za-z_]\w*\b", expr):
             if emask[im.start()] or esub[im.start()]:
                 continue
@@ -9970,25 +9949,17 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     )
 
 
-def _subquery_mask(expr: str, lit_mask: list) -> list:
+_SUBQUERY_OPEN_RE = re.compile(r"\(\s*SELECT(?![^\W_])", re.IGNORECASE)
+
+
+def _subquery_mask(expr: str) -> list:
     """True for positions inside a ``(SELECT …)`` group — refs there
     resolve in the subquery's own scope and must not be rewritten."""
+    lx = _Lex(expr)
     out = [False] * len(expr)
-    stack: list[bool] = []
-    for i, c in enumerate(expr):
-        if not lit_mask[i]:
-            if c == "(":
-                j = i + 1
-                while j < len(expr) and expr[j].isspace():
-                    j += 1
-                is_sub = expr[j : j + 6].upper() == "SELECT" and (
-                    j + 6 >= len(expr) or not expr[j + 6].isalnum()
-                )
-                stack.append(is_sub or (bool(stack) and stack[-1]))
-            elif c == ")" and stack:
-                stack.pop()
-        if stack and stack[-1]:
-            out[i] = True
+    for m in _unmasked(_SUBQUERY_OPEN_RE, lx):
+        end = lx.close.get(m.start(), len(expr) + 1) - 1
+        out[m.start() : end] = [True] * (end - m.start())
     return out
 
 
@@ -9997,7 +9968,7 @@ def _iter_qual_subst(expr: str, mask: list):
     non-overlapping, skipping literal regions, qualified FUNCTION calls
     (``db.fn(x)`` — the dot chain names a routine, not a column), and
     subquery bodies (their refs resolve in their own scope)."""
-    sub = _subquery_mask(expr, mask)
+    sub = _subquery_mask(expr)
     i = 0
     while i < len(expr):
         m = _QUAL_REF_RE.match(expr, i)
@@ -10223,14 +10194,12 @@ def _collapse_trivial_subquery_wrappers(sql: str) -> str:
     one-item FROM-less select of a scalar subquery is that scalar).
     Iterates to fixpoint so the two compose across nesting levels."""
     changed = True
-    while changed:
+    while changed:  # one collapse per round
         changed = False
-        mask = _literal_mask(sql)
-        for m in _PAREN_SEL_ANY_RE.finditer(sql):
+        lx = _lex(sql)
+        for m in _unmasked(_PAREN_SEL_ANY_RE, lx):
             p = m.start()
-            if mask[p]:
-                continue
-            close = _scan_matching_paren(sql, p + 1)
+            close = lx.match_paren(p + 1)
             body = sql[p + 1 : close - 1]
             star = re.match(
                 r"\s*SELECT\s+\*\s+FROM\s*\(", body, re.IGNORECASE
@@ -10247,14 +10216,11 @@ def _collapse_trivial_subquery_wrappers(sql: str) -> str:
                 r"\s*SELECT\b", body[inner_open + 1 :], re.IGNORECASE
             ):
                 continue
-            inner_close = _Lex(body).match_paren(inner_open + 1)
-            if body[inner_close:].strip():
+            inner_open += p + 1
+            inner_close = min(lx.match_paren(inner_open + 1), close - 1)
+            if sql[inner_close : close - 1].strip():
                 continue  # alias / WHERE / anything else: not a no-op
-            sql = (
-                sql[:p]
-                + body[inner_open:inner_close]
-                + sql[close:]
-            )
+            sql = sql[:p] + sql[inner_open:inner_close] + sql[close:]
             changed = True
             break
     return sql

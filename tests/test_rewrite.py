@@ -721,3 +721,69 @@ def test_interval_pool_qualified_lookup_no_collision():
     # end-to-end: the unrelated qualified cast stays a plain string cast
     out = rewrite(sql)
     assert "CAST(r.b AS STRING)" in out
+
+
+def _array_in_sql(n: int) -> str:
+    """``ARRAY[a, b, c] IN (<n arrays>)`` — the G4317 shape at size n."""
+    body = ", ".join(f"ARRAY[{i}, {i + 1}, {i + 2}]" for i in range(n))
+    return f"SELECT ARRAY[-1, 0, 1] IN ({body})"
+
+
+def test_rewrite_time_is_linear_in_statement_size():
+    """One lexer per pass and none per match: doubling the list about
+    doubles rewrite() time (a per-match literal mask made it ~5x), and
+    the number of lexers built does not grow with the list."""
+    import time
+
+    from presto_ads_spark.rewrite import _Lex
+
+    def best_of_3(n: int) -> tuple[float, int]:
+        sql, best, builds = _array_in_sql(n), float("inf"), set()
+        for _ in range(3):
+            before = _Lex.builds
+            t0 = time.perf_counter()
+            rewrite(sql)
+            best = min(best, time.perf_counter() - t0)
+            builds.add(_Lex.builds - before)
+        assert len(builds) == 1, builds
+        return best, builds.pop()
+
+    t500, builds500 = best_of_3(500)
+    t1000, builds1000 = best_of_3(1000)
+    assert t1000 / t500 <= 3, (t500, t1000)
+    assert builds1000 == builds500
+
+
+def test_lexer_literals_depth_and_matches():
+    from presto_ads_spark.rewrite import _Lex, _split_literals
+
+    sql = "f('a''(b', [x, (y)]), 'c"
+    lx = _Lex(sql)
+    # '' joins two literals into one run; an unclosed literal runs to
+    # the end and its parens are data
+    assert lx.literals == [(2, 9), (22, 24)]
+    assert _split_literals(sql) == [
+        ("f(", False), ("'a''(b'", True), (", [x, (y)]), ", False),
+        ("'c", True),
+    ]
+    assert lx.match_paren(2) == 20 and lx.bclose[11] == 19
+    assert lx.args(2, 19) == ["'a''(b'", "[x, (y)]"]
+    assert lx.blank_nested() == "f" + " " * 19 + ",   "
+    # a start that is not just past a structural '(' reads on as code:
+    # there the quote after ``b`` opens a literal, so nothing closes
+    assert lx.match_paren(7) == len(sql)
+
+
+def test_relation_position_forward_pass():
+    from presto_ads_spark.rewrite import _in_relation_position
+
+    def rel(sql: str) -> list[int]:
+        return [i for i, c in enumerate(sql) if c == "(" and
+                _in_relation_position(sql, i)]
+
+    sql = "SELECT f(x) FROM a, (SELECT 1) t JOIN (b) ON (c) WHERE y IN (z)"
+    assert rel(sql) == [sql.index("(SELECT"), sql.index("(b)")]
+    # words read up to their last letter, and a stray ')' hides what
+    # precedes it
+    assert rel("SELECT * FROM2 (t)") == [15]
+    assert rel("FROM a) (t)") == []
