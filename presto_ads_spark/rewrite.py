@@ -7764,6 +7764,7 @@ _SELECT_KW_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
 _SETOP_DISTINCT_RE = re.compile(
     r"\b(INTERSECT|EXCEPT)\b(?!\s+ALL\b)", re.IGNORECASE
 )
+_ASCII_WORD_RE = re.compile(r"(?<![A-Za-z_])[A-Za-z_]+")
 _SELECT_LIST_END_WORDS = frozenset(
     "FROM WHERE GROUP ORDER HAVING UNION INTERSECT EXCEPT LIMIT WINDOW".split()
 )
@@ -7792,28 +7793,19 @@ def _rewrite_setop_void_nulls(sql: str) -> str:
     ]
     for m in reversed(selects):
         start = m.end()
-        depth, i, in_str, end = 0, start, False, len(sql)
-        while i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                w = re.match(r"[A-Za-z_]+", sql[i:]).group(0)
-                if w.upper() in _SELECT_LIST_END_WORDS:
-                    end = i
-                    break
-                i += len(w) - 1
-            i += 1
-        items = _split_top_level(sql[start:end])
+        # the select list ends at an unbalanced ')'/']', a clause word at
+        # its own depth, or the end of the text
+        lx = _lex(sql)
+        end = lx.group_end(start)
+        base = lx.group_depth(start - 1)
+        for w in _unmasked(_ASCII_WORD_RE, lx, start):
+            if w.start() >= end:
+                break
+            if (w.group().upper() in _SELECT_LIST_END_WORDS
+                    and lx.group_depth(w.start()) == base):
+                end = w.start()
+                break
+        items = lx.args(start, end)
         new_items, changed = [], False
         for it in items:
             mm = re.fullmatch(
@@ -9194,6 +9186,35 @@ def _char_alias_lengths(sql: str, seed=None) -> dict[str, int]:
     return out
 
 
+_CHAR_CMP_OPS = (
+    r"IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>"
+)
+
+
+def _sub_scan(sql: str, pat: re.Pattern, fn, head: re.Pattern | None = None):
+    """One left-to-right pass over ``sql``: ``fn(m, mask)`` returns
+    ``(end, text)`` to replace ``sql[m.start():end]`` — the scan resumes
+    at ``end`` — or None to resume after ``m``. ``head`` (``pat`` without
+    its lookbehind) is tried first right after a rewrite, whose closing
+    ')' that lookbehind would admit."""
+    mask = _lex(sql).mask
+    out, last, pos = [], 0, 0
+    while True:
+        m = head.match(sql, pos) if head and out and pos == last else None
+        m = m or pat.search(sql, pos)
+        if m is None:
+            break
+        hit = fn(m, mask)
+        if hit is None:
+            pos = m.end()
+            continue
+        end, text = hit
+        out += [sql[last : m.start()], text]
+        last = pos = end
+    out.append(sql[last:])
+    return "".join(out)
+
+
 def _char_alias_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
     """Cross-length char comparisons where one or both sides are known
     char(n) ALIASES (their values are already padded to their declared
@@ -9207,79 +9228,62 @@ def _char_alias_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
 
     # alias <op> CAST(e AS CHAR(m))  — and the mirrored cast <op> alias
     a_re = re.compile(
-        rf"(?<![\w.'])({_CHAR_IDENT_RE})\s*(IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>)\s*"
+        rf"(?<![\w.'])({_CHAR_IDENT_RE})\s*({_CHAR_CMP_OPS})\s*"
         r"(?=(?:TRY_)?CAST\s*\()",
         re.IGNORECASE,
     )
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = a_re.search(sql, i)
-        if not m:
-            break
+
+    def alias_cast(m, mask):
         n1 = None if mask[m.start()] else _alias_len(m.group(1))
         cm = _CAST_OPEN_RE.match(sql, m.end())
         parsed = _parse_char_cast(sql, cm) if (cm and n1) else None
         if parsed is None:
-            i = m.end()
-            continue
+            return None
         kw, expr, n2, j = parsed
         n = max(n1, n2)
         lhs = m.group(1) if n == n1 else f"rpad({m.group(1)}, {n}, ' ')"
-        rep = f"{lhs} {m.group(2)} rpad({kw}({expr} AS STRING), {n}, ' ')"
-        sql = sql[: m.start()] + rep + sql[j:]
-        i = m.start() + len(rep)
+        return j, f"{lhs} {m.group(2)} rpad({kw}({expr} AS STRING), {n}, ' ')"
+
+    sql = _sub_scan(sql, a_re, alias_cast)
     b_re = re.compile(
-        rf"\s*(IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>)\s*({_CHAR_IDENT_RE})(?![\w.(])",
-        re.IGNORECASE,
+        rf"\s*({_CHAR_CMP_OPS})\s*({_CHAR_IDENT_RE})(?![\w.(])", re.IGNORECASE
     )
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        cm = _CAST_OPEN_RE.search(sql, i)
-        if not cm:
-            break
+
+    def cast_alias(cm, mask):
         parsed = None if mask[cm.start()] else _parse_char_cast(sql, cm)
         if parsed is None:
-            i = cm.end()
-            continue
+            return None
         kw, expr, n1, j = parsed
         om = b_re.match(sql, j)
         n2 = _alias_len(om.group(2)) if om else None
         if n2 is None:
-            i = cm.end()
-            continue
+            return None
         n = max(n1, n2)
         rhs = om.group(2) if n == n2 else f"rpad({om.group(2)}, {n}, ' ')"
-        rep = f"rpad({kw}({expr} AS STRING), {n}, ' ') {om.group(1)} {rhs}"
-        sql = sql[: cm.start()] + rep + sql[om.end() :]
-        i = cm.start() + len(rep)
+        return om.end(), (
+            f"rpad({kw}({expr} AS STRING), {n}, ' ') {om.group(1)} {rhs}"
+        )
+
+    sql = _sub_scan(sql, _CAST_OPEN_RE, cast_alias)
     # alias <op> alias with different declared lengths
     c_re = re.compile(
-        rf"(?<![\w.'])({_CHAR_IDENT_RE})\s*(IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>)\s*"
+        rf"(?<![\w.'])({_CHAR_IDENT_RE})\s*({_CHAR_CMP_OPS})\s*"
         rf"({_CHAR_IDENT_RE})(?![\w.(])",
         re.IGNORECASE,
     )
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = c_re.search(sql, i)
-        if not m:
-            break
+
+    def alias_alias(m, mask):
         if mask[m.start()]:
-            i = m.end()
-            continue
+            return None
         n1, n2 = _alias_len(m.group(1)), _alias_len(m.group(3))
         if n1 is None or n2 is None or n1 == n2:
-            i = m.end()
-            continue
+            return None
         n = max(n1, n2)
         lhs = m.group(1) if n == n1 else f"rpad({m.group(1)}, {n}, ' ')"
         rhs = m.group(3) if n == n2 else f"rpad({m.group(3)}, {n}, ' ')"
-        rep = f"{lhs} {m.group(2)} {rhs}"
-        sql = sql[: m.start()] + rep + sql[m.end() :]
-        i = m.start() + len(rep)
-    return sql
+        return m.end(), f"{lhs} {m.group(2)} {rhs}"
+
+    return _sub_scan(sql, c_re, alias_alias)
 
 
 def _lit_codepoints(lit: str) -> int:
@@ -9293,110 +9297,89 @@ def _char_vs_literal_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
     comparison: pad BOTH to max(n, literal length) per Presto's
     char/varchar coercion (a literal longer than n only matches when its
     tail is the padding spaces — exactly what common-length rpad gives)."""
-    # cast/alias OP literal
-    i = 0
-    while True:
-        mask = _literal_mask(sql)
-        m = _CAST_OPEN_RE.search(sql, i)
-        if not m:
-            break
+    op_lit_re = re.compile(
+        rf"\s*({_CHAR_CMP_OPS})\s*({_SQL_STR_LIT})(?!')", re.IGNORECASE
+    )
+
+    def cast_lit(m, mask):  # cast OP literal
         parsed = None if mask[m.start()] else _parse_char_cast(sql, m)
         if parsed is None:
-            i = m.end()
-            continue
+            return None
         kw, expr, n, j = parsed
-        om = re.compile(
-            rf"\s*(IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>)\s*({_SQL_STR_LIT})(?!')",
-            re.IGNORECASE,
-        ).match(sql, j)
+        om = op_lit_re.match(sql, j)
         if om is None:
-            i = m.end()
-            continue
+            return None
         nn = max(n, _lit_codepoints(om.group(2)))
-        rep = (
+        return om.end(), (
             f"rpad({kw}({expr} AS STRING), {nn}, ' ') {om.group(1)} "
             f"rpad({om.group(2)}, {nn}, ' ')"
         )
-        sql = sql[: m.start()] + rep + sql[om.end() :]
-        i = m.start() + len(rep)
-    # literal OP cast
+
+    sql = _sub_scan(sql, _CAST_OPEN_RE, cast_lit)
     lit_re = re.compile(
-        rf"({_SQL_STR_LIT})\s*(IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>)\s*(?=(?:TRY_)?CAST\s*\()",
+        rf"({_SQL_STR_LIT})\s*({_CHAR_CMP_OPS})\s*(?=(?:TRY_)?CAST\s*\()",
         re.IGNORECASE,
     )
-    i = 0
-    while True:
-        m = lit_re.search(sql, i)
-        if not m:
-            break
-        mask = _literal_mask(sql)
+
+    def lit_cast(m, mask):  # literal OP cast
         # the literal itself is masked; require its OPENING quote to be
         # the literal start (not inside a bigger literal)
         if m.start() > 0 and mask[m.start()] and mask[m.start() - 1]:
-            i = m.end()
-            continue
+            return None
         cm = _CAST_OPEN_RE.match(sql, m.end())
         parsed = _parse_char_cast(sql, cm) if cm else None
         if parsed is None:
-            i = m.end()
-            continue
+            return None
         kw, expr, n, j = parsed
         nn = max(n, _lit_codepoints(m.group(1)))
-        rep = (
+        return j, (
             f"rpad({m.group(1)}, {nn}, ' ') {m.group(2)} "
             f"rpad({kw}({expr} AS STRING), {nn}, ' ')"
         )
-        sql = sql[: m.start()] + rep + sql[j:]
-        i = m.start() + len(rep)
-    # alias OP literal / literal OP alias
-    if aliases:
-        def _alias_len(ident):
-            return aliases.get(ident.rsplit(".", 1)[-1].lower())
 
-        a_re = re.compile(
-            rf"(?<![\w.'])({_CHAR_IDENT_RE})\s*(IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>)\s*"
-            rf"({_SQL_STR_LIT})(?!')",
-            re.IGNORECASE,
-        )
-        i = 0
-        while True:
-            mask = _literal_mask(sql)
-            m = a_re.search(sql, i)
-            if not m:
-                break
-            n1 = None if mask[m.start()] else _alias_len(m.group(1))
-            if n1 is None:
-                i = m.end()
-                continue
-            nn = max(n1, _lit_codepoints(m.group(3)))
-            lhs = m.group(1) if nn == n1 else f"rpad({m.group(1)}, {nn}, ' ')"
-            rep = f"{lhs} {m.group(2)} rpad({m.group(3)}, {nn}, ' ')"
-            sql = sql[: m.start()] + rep + sql[m.end() :]
-            i = m.start() + len(rep)
-        b_re = re.compile(
-            rf"({_SQL_STR_LIT})\s*(IS\s+NOT\s+DISTINCT\s+FROM|IS\s+DISTINCT\s+FROM|<>|!=|<=|>=|=|<|>)\s*"
-            rf"({_CHAR_IDENT_RE})(?![\w.(])",
-            re.IGNORECASE,
-        )
-        i = 0
-        while True:
-            mask = _literal_mask(sql)
-            m = b_re.search(sql, i)
-            if not m:
-                break
-            if m.start() > 0 and mask[m.start()] and mask[m.start() - 1]:
-                i = m.end()
-                continue
-            n2 = _alias_len(m.group(3))
-            if n2 is None:
-                i = m.end()
-                continue
-            nn = max(n2, _lit_codepoints(m.group(1)))
-            rhs = m.group(3) if nn == n2 else f"rpad({m.group(3)}, {nn}, ' ')"
-            rep = f"rpad({m.group(1)}, {nn}, ' ') {m.group(2)} {rhs}"
-            sql = sql[: m.start()] + rep + sql[m.end() :]
-            i = m.start() + len(rep)
-    return sql
+    sql = _sub_scan(sql, lit_re, lit_cast)
+    if not aliases:
+        return sql
+
+    def _alias_len(ident):
+        return aliases.get(ident.rsplit(".", 1)[-1].lower())
+
+    # alias OP literal / literal OP alias
+    alias_lit = (
+        rf"({_CHAR_IDENT_RE})\s*({_CHAR_CMP_OPS})\s*({_SQL_STR_LIT})(?!')"
+    )
+    a_re = re.compile(rf"(?<![\w.']){alias_lit}", re.IGNORECASE)
+
+    def alias_op_lit(m, mask):
+        n1 = None if mask[m.start()] else _alias_len(m.group(1))
+        if n1 is None:
+            return None
+        nn = max(n1, _lit_codepoints(m.group(3)))
+        lhs = m.group(1) if nn == n1 else f"rpad({m.group(1)}, {nn}, ' ')"
+        return m.end(), f"{lhs} {m.group(2)} rpad({m.group(3)}, {nn}, ' ')"
+
+    # a rewrite ends in ')', which the lookbehind admits: an alias right
+    # after one matches there without it
+    sql = _sub_scan(
+        sql, a_re, alias_op_lit, re.compile(alias_lit, re.IGNORECASE)
+    )
+    b_re = re.compile(
+        rf"({_SQL_STR_LIT})\s*({_CHAR_CMP_OPS})\s*"
+        rf"({_CHAR_IDENT_RE})(?![\w.(])",
+        re.IGNORECASE,
+    )
+
+    def lit_op_alias(m, mask):
+        if m.start() > 0 and mask[m.start()] and mask[m.start() - 1]:
+            return None
+        n2 = _alias_len(m.group(3))
+        if n2 is None:
+            return None
+        nn = max(n2, _lit_codepoints(m.group(1)))
+        rhs = m.group(3) if nn == n2 else f"rpad({m.group(3)}, {nn}, ' ')"
+        return m.end(), f"rpad({m.group(1)}, {nn}, ' ') {m.group(2)} {rhs}"
+
+    return _sub_scan(sql, b_re, lit_op_alias)
 
 
 def _char_between_pass(sql: str) -> str:
