@@ -14,6 +14,17 @@ grammar: reference presto-parser/.../SqlBase.g4). The gaps are closed here by
 
 The rewriter is deliberately conservative: it only touches text outside
 single-quoted string literals, and every rewrite has a unit test.
+
+Lexing contract: a text is lexed once. ``_lex(sql)`` builds one ``_Lex``
+index — string literals, paren/bracket matches and depths, commas — and
+hands the same one back while the text is unchanged, so passes that
+leave the text alone share it. Passes read literal state and depth from
+it and never rescan for literals: a pass walks its matches left to right
+over one lexer and emits into a buffer instead of splicing and
+re-lexing per match. A helper that works on a fragment of the statement
+lexes just the fragment (``_Lex(piece)``), leaving the statement's lexer
+in place. ``tests/test_rewrite_snapshot.py`` pins the output of every
+corpus statement byte for byte.
 """
 
 from __future__ import annotations
@@ -403,6 +414,29 @@ def _unmasked(pat: re.Pattern, lx: _Lex, pos: int = 0):
     for m in pat.finditer(lx.text, pos):
         if not mask[m.start()]:
             yield m
+
+
+def _rescan_sub(sql: str, pat: re.Pattern, step, pos: int = 0) -> str:
+    """One left-to-right pass of ``pat`` (from ``pos``) for passes whose
+    rewrites are scanned again: ``step(lx, m)`` returns None to resume
+    after ``m``, or ``(end, text, again)`` to put ``text`` in place of
+    ``sql[m.start():end]`` and scan ``text`` from ``again`` on (its
+    length: not at all). Each rewrite is scanned on its own, so the
+    statement is lexed once, not once per rewrite."""
+    lx = _lex(sql)
+    out, last = [], 0
+    while (m := pat.search(sql, pos)) is not None:
+        hit = step(lx, m)
+        if hit is None:
+            pos = m.end()
+            continue
+        end, text, again = hit
+        if again < len(text):
+            text = _rescan_sub(text, pat, step, again)
+        out += [sql[last : m.start()], text]
+        last = pos = end
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _lex_at(lx: _Lex, i: int) -> tuple[_Lex, int]:
@@ -3717,6 +3751,9 @@ def _fold_numeric_literal_casts(sql: str) -> str:
     return _REAL_DEC_CAST_RE.sub(dec_sub, sql)
 
 
+_AS_ROW_OPEN_RE = re.compile(r"\s+AS\s+ROW\s*\(", re.IGNORECASE)
+
+
 def _fold_row_of_json_cast(sql: str) -> str:
     """``CAST(row(json 'a', json 'b', …) AS ROW(…))`` — a row of JSON
     literals casting to a typed row coerces per field
@@ -3724,35 +3761,23 @@ def _fold_row_of_json_cast(sql: str) -> str:
     equivalent positional JSON ARRAY literal so the JSON→ROW lowering
     (get_json_object field builder) handles it. Must run BEFORE
     _fold_json_literal_casts strips the JSON markers."""
-    i = 0
-    pat = re.compile(r"\b(?:TRY_)?CAST\s*\(\s*row\s*\(", re.IGNORECASE)
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            return sql
-        row_open = sql.rindex("(", m.start(), m.end())
-        j1 = _scan_matching_paren(sql, row_open + 1)
-        args = _split_top_level(sql[row_open + 1 : j1 - 1])
+    pat = re.compile(r"\b(?:TRY_)?CAST\s*\(\s*(row)\s*\(", re.IGNORECASE)
+
+    def step(lx: _Lex, m: re.Match):
+        j1 = lx.match_paren(m.end())
         lits = []
-        for a in args:
+        for a in lx.args(m.end(), j1 - 1):
             am = re.fullmatch(r"(?is)\s*JSON\s*'((?:[^']|'')*)'\s*", a)
             if not am:
-                lits = None
-                break
+                return None
             lits.append(am.group(1).replace("''", "'"))
-        rest = sql[j1:]
-        rm = re.match(r"\s+AS\s+ROW\s*\(", rest, re.IGNORECASE)
-        if lits is None or rm is None:
-            i = m.end()
-            continue
+        if not _AS_ROW_OPEN_RE.match(lx.text, j1):
+            return None
         json_text = "[" + ",".join(lits) + "]"
         repl = "JSON '" + json_text.replace("'", "''") + "'"
-        head = sql[:row_open].rstrip()
-        if not head.lower().endswith("row"):
-            i = m.end()
-            continue
-        sql = head[:-3] + repl + rest
-        i = m.start() + 1
+        return j1, lx.text[m.start() : m.start(1)] + repl, 1
+
+    return _rescan_sub(sql, pat, step)
 
 
 def _fold_json_literal_casts(sql: str) -> str:
@@ -7732,32 +7757,26 @@ def _rewrite_time_casts(sql: str) -> str:
     emulation (epoch-anchored timestamps — README Known gaps): keep the
     time-of-day, anchor the date to 1970-01-01. Millisecond precision
     matches Presto's TIME resolution."""
-    i = 0
-    while True:
-        m = _CAST_OPEN_RE.search(sql, i)
-        if not m:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
-        inner = sql[m.end() : j - 1]
+
+    def step(lx: _Lex, m: re.Match):
+        j = lx.match_paren(m.end())
+        inner = lx.text[m.end() : j - 1]
         as_pos = _top_level_last_as(inner)
         if as_pos is None:
-            i = m.end()
-            continue
+            return None
         target = inner[as_pos + 2 :].strip()
         if not re.fullmatch(
             r"TIME(\s+WITH\s+TIME\s+ZONE)?", target, re.IGNORECASE
         ):
-            i = m.end()
-            continue
+            return None
         expr = inner[:as_pos].strip()
-        kw = sql[m.start() : m.end() - 1].strip().upper().split("(")[0]
-        sql = (
-            sql[: m.start()]
-            + f"{kw}(concat('1970-01-01 ', "
-            + f"__spark_date_format({expr}, 'HH:mm:ss.SSS')) AS TIMESTAMP)"
-            + sql[j:]
-        )
-        i = m.start()
+        kw = m.group()[:-1].strip().upper().split("(")[0]
+        return j, (
+            f"{kw}(concat('1970-01-01 ', "
+            f"__spark_date_format({expr}, 'HH:mm:ss.SSS')) AS TIMESTAMP)"
+        ), 0
+
+    return _rescan_sub(sql, _CAST_OPEN_RE, step)
 
 
 _SELECT_KW_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
@@ -8723,24 +8742,18 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
     Spark's option validation requires a literal map() call, so
     _rewrite_map_from_arrays skips 2-arg map() whose args are both
     quoted scalars."""
-    i = 0
-    while True:
-        m = _CAST_OPEN_RE.search(sql, i)
-        if not m:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
-        inner = sql[m.end() : j - 1]
+
+    def step(lx: _Lex, m: re.Match):
+        j = lx.match_paren(m.end())
+        inner = lx.text[m.end() : j - 1]
         as_pos = _cast_as_pos(inner)
         if as_pos < 0 or inner[as_pos + 4 :].strip().upper() != "JSON":
-            i = m.end()
-            continue
+            return None
         expr = inner[:as_pos].strip()
         if re.fullmatch(r"(?i)NULL", expr):
             # CAST(NULL AS JSON) is the JSON null value — the string
             # emulation's NULL cell (JsonOperators nullToJson)
-            sql = sql[: m.start()] + "CAST(NULL AS STRING)" + sql[j:]
-            i = m.start() + 1
-            continue
+            return j, "CAST(NULL AS STRING)", 1
         try:
             # literal composite (JSON/ARRAY/MAP/ROW built from literals):
             # fold to the canonical compact JSON text at rewrite time —
@@ -8751,9 +8764,7 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
                 # SQL NULL operand → SQL NULL json cell (the x-to-json
                 # casts are RETURN_NULL_ON_NULL); JSON 'null' keeps the
                 # json null TEXT via the _JSON_NULL sentinel
-                sql = sql[: m.start()] + "CAST(NULL AS STRING)" + sql[j:]
-                i = m.start() + 1
-                continue
+                return j, "CAST(NULL AS STRING)", 1
             folded = _render_canonical_json(parsed)
         except ValueError:
             folded = None
@@ -8765,9 +8776,7 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
                 + folded.replace("\\", "\\\\").replace("'", "''")
                 + "'"
             )
-            sql = sql[: m.start()] + repl + sql[j:]
-            i = m.start() + len(repl)
-            continue
+            return j, repl, len(repl)
         rm = re.fullmatch(r"(?is)ROW\s*\((.*)\)", expr)
         args = _split_top_level(rm.group(1)) if rm else None
         if args and all(_flat_scalar_row_arg(a, scalar_cols) for a in args):
@@ -8779,8 +8788,9 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
                 "map('ignoreNullFields', 'false')), "
                 f"typeof({expr}))"
             )
-        sql = sql[: m.start()] + repl + sql[j:]
-        i = m.start()
+        return j, repl, 0
+
+    return _rescan_sub(sql, _CAST_OPEN_RE, step)
 
 
 def _json_scalar_coercion(t: str, v: str) -> str | None:
@@ -9016,22 +9026,18 @@ def _rewrite_json_casts(sql: str) -> str:
     JsonToArrayCast.java / JsonToRowCast.java). Presto's parenthesized
     complex-type syntax only exists on JSON casts, so the translation is
     unambiguous; Spark's angle-bracket casts pass through untouched."""
-    i = 0
-    while True:
-        m = _CAST_OPEN_RE.search(sql, i)
-        if not m:
-            return sql
-        j = _scan_matching_paren(sql, m.end())
-        inner = sql[m.end() : j - 1]
+
+    def step(lx: _Lex, m: re.Match):
+        j = lx.match_paren(m.end())
+        span = lx.text[m.start() : j]
+        inner = lx.text[m.end() : j - 1]
         # last top-level " AS " splits expr from target type
         as_pos = _cast_as_pos(inner)
         if as_pos < 0:
-            i = m.end()
-            continue
+            return None
         ttype = inner[as_pos + 4 :].strip()
         if not re.match(r"^(MAP|ARRAY|ROW)\s*[(<]", ttype, re.IGNORECASE):
-            i = m.end()
-            continue
+            return None
         expr = inner[:as_pos]
         is_ctor = bool(
             re.match(
@@ -9069,21 +9075,14 @@ def _rewrite_json_casts(sql: str) -> str:
                 schema = _presto_type_to_spark(ttype)
                 if schema is not None:
                     rep = _json_composite_parse(expr, ttype, schema)
-                    sql = sql[: m.start()] + rep + sql[j:]
-                    i = m.start() + 1  # rescan inside expr, not this span
-                    continue
-            kw = sql[m.start() : m.end() - 1].rstrip()  # CAST / TRY_CAST
+                    return j, rep, 1  # rescan inside expr, not this span
+            kw = m.group().rstrip("(").rstrip()  # CAST / TRY_CAST
             rep = f"{kw}({expr} AS {fixed})"
-            if rep == sql[m.start() : j]:  # fixed point: never loop
-                i = j
-                continue
-            sql = sql[: m.start()] + rep + sql[j:]
-            i = m.start() + 1
-            continue
+            # a fixed point is not scanned again: never loop
+            return j, rep, len(rep) if rep == span else 1
         schema = _presto_type_to_spark(ttype)
         if schema is None:
-            i = m.end()
-            continue
+            return None
         # ROW target over a row/struct constructor is Presto's NAMED ROW
         # CAST (assigns field names, RowType coercion) — a plain Spark
         # struct cast, not a JSON parse; likewise a MAP/ARRAY target over
@@ -9094,11 +9093,10 @@ def _rewrite_json_casts(sql: str) -> str:
             rep = f"CAST({expr} AS {schema})"
         else:
             rep = _json_composite_parse(expr, ttype, schema)
-        if rep == sql[m.start() : j]:  # fixed point: never re-scan in place
-            i = j
-            continue
-        sql = sql[: m.start()] + rep + sql[j:]
-        i = m.start()
+        # a fixed point is not scanned again in place
+        return j, rep, len(rep) if rep == span else 0
+
+    return _rescan_sub(sql, _CAST_OPEN_RE, step)
 
 
 def _parse_char_cast(sql: str, m) -> tuple[str, str, int, int] | None:
