@@ -416,23 +416,32 @@ def _unmasked(pat: re.Pattern, lx: _Lex, pos: int = 0):
             yield m
 
 
-def _rescan_sub(sql: str, pat: re.Pattern, step, pos: int = 0) -> str:
-    """One left-to-right pass of ``pat`` (from ``pos``) for passes whose
-    rewrites are scanned again: ``step(lx, m)`` returns None to resume
-    after ``m``, or ``(end, text, again)`` to put ``text`` in place of
-    ``sql[m.start():end]`` and scan ``text`` from ``again`` on (its
-    length: not at all). Each rewrite is scanned on its own, so the
-    statement is lexed once, not once per rewrite."""
+def _sub_scan(
+    sql: str, pat: re.Pattern, step, head: re.Pattern | None = None,
+    pos: int = 0,
+) -> str:
+    """One left-to-right pass of ``pat`` over ``sql`` (from ``pos``) with
+    one lexer: ``step(lx, m)`` returns None to resume after ``m``, or
+    ``(end, text, again)`` to put ``text`` in place of
+    ``sql[m.start():end]`` and resume at ``end``. Passes whose rewrites
+    are scanned again pass ``again``: ``text`` is then scanned from there
+    on by itself, not by re-lexing the statement. ``head`` (``pat``
+    without its lookbehind) is tried first right after a rewrite, whose
+    closing ')' that lookbehind would admit."""
     lx = _lex(sql)
     out, last = [], 0
-    while (m := pat.search(sql, pos)) is not None:
+    while True:
+        m = head.match(sql, pos) if head and out and pos == last else None
+        m = m or pat.search(sql, pos)
+        if m is None:
+            break
         hit = step(lx, m)
         if hit is None:
             pos = m.end()
             continue
         end, text, again = hit
-        if again < len(text):
-            text = _rescan_sub(text, pat, step, again)
+        if again is not None and again < len(text):
+            text = _sub_scan(text, pat, step, head, again)
         out += [sql[last : m.start()], text]
         last = pos = end
     out.append(sql[last:])
@@ -2620,7 +2629,6 @@ def _lower_try_arith(e: str):
 
 _CASE_KW_RE = re.compile(r"\b(CASE|WHEN|THEN|ELSE|END)\b", re.IGNORECASE)
 
-_CAST_TOKEN_RE = re.compile(r"\bCAST\s*\(", re.IGNORECASE)
 
 
 # Null-propagating scalar functions (RETURN_NULL_ON_NULL in the reference
@@ -3777,7 +3785,7 @@ def _fold_row_of_json_cast(sql: str) -> str:
         repl = "JSON '" + json_text.replace("'", "''") + "'"
         return j1, lx.text[m.start() : m.start(1)] + repl, 1
 
-    return _rescan_sub(sql, pat, step)
+    return _sub_scan(sql, pat, step)
 
 
 def _fold_json_literal_casts(sql: str) -> str:
@@ -7776,7 +7784,7 @@ def _rewrite_time_casts(sql: str) -> str:
             f"__spark_date_format({expr}, 'HH:mm:ss.SSS')) AS TIMESTAMP)"
         ), 0
 
-    return _rescan_sub(sql, _CAST_OPEN_RE, step)
+    return _sub_scan(sql, _CAST_OPEN_RE, step)
 
 
 _SELECT_KW_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
@@ -8123,36 +8131,6 @@ def _top_level_from(s: str) -> int:
          if lx.paren_depth(m.start()) == 0),
         -1,
     )
-
-
-def _split_subquery(inner: str) -> tuple[str, str] | None:
-    """Split ``SELECT <proj> <rest>`` into (proj, rest incl. FROM); None if
-    the shape is unsupported (multi-column or DISTINCT projection)."""
-    if inner[:6].upper() != "SELECT":
-        return None
-    body = inner[6:]
-    f = _top_level_from(body)
-    if f < 0:
-        # FROM-less subquery: the projection ends at the first depth-0
-        # clause keyword (``SELECT 1 WHERE FALSE``) or end of text
-        cm = re.search(
-            r"\b(WHERE|GROUP|HAVING|ORDER|UNION|EXCEPT|INTERSECT|LIMIT)\b",
-            body,
-            re.IGNORECASE,
-        )
-        f = cm.start() if cm else len(body)
-    proj = body[:f].strip()
-    depth = 0
-    for c in proj:
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            return None
-    if not proj or proj.upper().startswith("DISTINCT"):
-        return None
-    return proj, body[f:]
 
 
 _IN_SUBQ_RE = re.compile(r"(\bNOT\s+)?\bIN\s*\(\s*SELECT\b", re.IGNORECASE)
@@ -8790,7 +8768,7 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
             )
         return j, repl, 0
 
-    return _rescan_sub(sql, _CAST_OPEN_RE, step)
+    return _sub_scan(sql, _CAST_OPEN_RE, step)
 
 
 def _json_scalar_coercion(t: str, v: str) -> str | None:
@@ -9096,7 +9074,7 @@ def _rewrite_json_casts(sql: str) -> str:
         # a fixed point is not scanned again in place
         return j, rep, len(rep) if rep == span else 0
 
-    return _rescan_sub(sql, _CAST_OPEN_RE, step)
+    return _sub_scan(sql, _CAST_OPEN_RE, step)
 
 
 def _parse_char_cast(sql: str, m) -> tuple[str, str, int, int] | None:
@@ -9189,30 +9167,6 @@ _CHAR_CMP_OPS = (
 )
 
 
-def _sub_scan(sql: str, pat: re.Pattern, fn, head: re.Pattern | None = None):
-    """One left-to-right pass over ``sql``: ``fn(m, mask)`` returns
-    ``(end, text)`` to replace ``sql[m.start():end]`` — the scan resumes
-    at ``end`` — or None to resume after ``m``. ``head`` (``pat`` without
-    its lookbehind) is tried first right after a rewrite, whose closing
-    ')' that lookbehind would admit."""
-    mask = _lex(sql).mask
-    out, last, pos = [], 0, 0
-    while True:
-        m = head.match(sql, pos) if head and out and pos == last else None
-        m = m or pat.search(sql, pos)
-        if m is None:
-            break
-        hit = fn(m, mask)
-        if hit is None:
-            pos = m.end()
-            continue
-        end, text = hit
-        out += [sql[last : m.start()], text]
-        last = pos = end
-    out.append(sql[last:])
-    return "".join(out)
-
-
 def _char_alias_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
     """Cross-length char comparisons where one or both sides are known
     char(n) ALIASES (their values are already padded to their declared
@@ -9231,28 +9185,29 @@ def _char_alias_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         re.IGNORECASE,
     )
 
-    def alias_cast(m, mask):
-        n1 = None if mask[m.start()] else _alias_len(m.group(1))
-        cm = _CAST_OPEN_RE.match(sql, m.end())
-        parsed = _parse_char_cast(sql, cm) if (cm and n1) else None
+    def alias_cast(lx, m):
+        n1 = None if lx.mask[m.start()] else _alias_len(m.group(1))
+        cm = _CAST_OPEN_RE.match(lx.text, m.end())
+        parsed = _parse_char_cast(lx.text, cm) if (cm and n1) else None
         if parsed is None:
             return None
         kw, expr, n2, j = parsed
         n = max(n1, n2)
         lhs = m.group(1) if n == n1 else f"rpad({m.group(1)}, {n}, ' ')"
-        return j, f"{lhs} {m.group(2)} rpad({kw}({expr} AS STRING), {n}, ' ')"
+        rhs = f"rpad({kw}({expr} AS STRING), {n}, ' ')"
+        return j, f"{lhs} {m.group(2)} {rhs}", None
 
     sql = _sub_scan(sql, a_re, alias_cast)
     b_re = re.compile(
         rf"\s*({_CHAR_CMP_OPS})\s*({_CHAR_IDENT_RE})(?![\w.(])", re.IGNORECASE
     )
 
-    def cast_alias(cm, mask):
-        parsed = None if mask[cm.start()] else _parse_char_cast(sql, cm)
+    def cast_alias(lx, cm):
+        parsed = None if lx.mask[cm.start()] else _parse_char_cast(lx.text, cm)
         if parsed is None:
             return None
         kw, expr, n1, j = parsed
-        om = b_re.match(sql, j)
+        om = b_re.match(lx.text, j)
         n2 = _alias_len(om.group(2)) if om else None
         if n2 is None:
             return None
@@ -9260,7 +9215,7 @@ def _char_alias_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         rhs = om.group(2) if n == n2 else f"rpad({om.group(2)}, {n}, ' ')"
         return om.end(), (
             f"rpad({kw}({expr} AS STRING), {n}, ' ') {om.group(1)} {rhs}"
-        )
+        ), None
 
     sql = _sub_scan(sql, _CAST_OPEN_RE, cast_alias)
     # alias <op> alias with different declared lengths
@@ -9270,8 +9225,8 @@ def _char_alias_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         re.IGNORECASE,
     )
 
-    def alias_alias(m, mask):
-        if mask[m.start()]:
+    def alias_alias(lx, m):
+        if lx.mask[m.start()]:
             return None
         n1, n2 = _alias_len(m.group(1)), _alias_len(m.group(3))
         if n1 is None or n2 is None or n1 == n2:
@@ -9279,7 +9234,7 @@ def _char_alias_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         n = max(n1, n2)
         lhs = m.group(1) if n == n1 else f"rpad({m.group(1)}, {n}, ' ')"
         rhs = m.group(3) if n == n2 else f"rpad({m.group(3)}, {n}, ' ')"
-        return m.end(), f"{lhs} {m.group(2)} {rhs}"
+        return m.end(), f"{lhs} {m.group(2)} {rhs}", None
 
     return _sub_scan(sql, c_re, alias_alias)
 
@@ -9299,19 +9254,19 @@ def _char_vs_literal_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         rf"\s*({_CHAR_CMP_OPS})\s*({_SQL_STR_LIT})(?!')", re.IGNORECASE
     )
 
-    def cast_lit(m, mask):  # cast OP literal
-        parsed = None if mask[m.start()] else _parse_char_cast(sql, m)
+    def cast_lit(lx, m):  # cast OP literal
+        parsed = None if lx.mask[m.start()] else _parse_char_cast(lx.text, m)
         if parsed is None:
             return None
         kw, expr, n, j = parsed
-        om = op_lit_re.match(sql, j)
+        om = op_lit_re.match(lx.text, j)
         if om is None:
             return None
         nn = max(n, _lit_codepoints(om.group(2)))
         return om.end(), (
             f"rpad({kw}({expr} AS STRING), {nn}, ' ') {om.group(1)} "
             f"rpad({om.group(2)}, {nn}, ' ')"
-        )
+        ), None
 
     sql = _sub_scan(sql, _CAST_OPEN_RE, cast_lit)
     lit_re = re.compile(
@@ -9319,13 +9274,13 @@ def _char_vs_literal_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         re.IGNORECASE,
     )
 
-    def lit_cast(m, mask):  # literal OP cast
+    def lit_cast(lx, m):  # literal OP cast
         # the literal itself is masked; require its OPENING quote to be
         # the literal start (not inside a bigger literal)
-        if m.start() > 0 and mask[m.start()] and mask[m.start() - 1]:
+        if m.start() > 0 and lx.mask[m.start()] and lx.mask[m.start() - 1]:
             return None
-        cm = _CAST_OPEN_RE.match(sql, m.end())
-        parsed = _parse_char_cast(sql, cm) if cm else None
+        cm = _CAST_OPEN_RE.match(lx.text, m.end())
+        parsed = _parse_char_cast(lx.text, cm) if cm else None
         if parsed is None:
             return None
         kw, expr, n, j = parsed
@@ -9333,7 +9288,7 @@ def _char_vs_literal_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         return j, (
             f"rpad({m.group(1)}, {nn}, ' ') {m.group(2)} "
             f"rpad({kw}({expr} AS STRING), {nn}, ' ')"
-        )
+        ), None
 
     sql = _sub_scan(sql, lit_re, lit_cast)
     if not aliases:
@@ -9348,13 +9303,14 @@ def _char_vs_literal_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
     )
     a_re = re.compile(rf"(?<![\w.']){alias_lit}", re.IGNORECASE)
 
-    def alias_op_lit(m, mask):
-        n1 = None if mask[m.start()] else _alias_len(m.group(1))
+    def alias_op_lit(lx, m):
+        n1 = None if lx.mask[m.start()] else _alias_len(m.group(1))
         if n1 is None:
             return None
         nn = max(n1, _lit_codepoints(m.group(3)))
         lhs = m.group(1) if nn == n1 else f"rpad({m.group(1)}, {nn}, ' ')"
-        return m.end(), f"{lhs} {m.group(2)} rpad({m.group(3)}, {nn}, ' ')"
+        rhs = f"rpad({m.group(3)}, {nn}, ' ')"
+        return m.end(), f"{lhs} {m.group(2)} {rhs}", None
 
     # a rewrite ends in ')', which the lookbehind admits: an alias right
     # after one matches there without it
@@ -9367,15 +9323,16 @@ def _char_vs_literal_cmp_pass(sql: str, aliases: dict[str, int]) -> str:
         re.IGNORECASE,
     )
 
-    def lit_op_alias(m, mask):
-        if m.start() > 0 and mask[m.start()] and mask[m.start() - 1]:
+    def lit_op_alias(lx, m):
+        if m.start() > 0 and lx.mask[m.start()] and lx.mask[m.start() - 1]:
             return None
         n2 = _alias_len(m.group(3))
         if n2 is None:
             return None
         nn = max(n2, _lit_codepoints(m.group(1)))
         rhs = m.group(3) if nn == n2 else f"rpad({m.group(3)}, {nn}, ' ')"
-        return m.end(), f"rpad({m.group(1)}, {nn}, ' ') {m.group(2)} {rhs}"
+        lhs = f"rpad({m.group(1)}, {nn}, ' ')"
+        return m.end(), f"{lhs} {m.group(2)} {rhs}", None
 
     return _sub_scan(sql, b_re, lit_op_alias)
 
@@ -9569,7 +9526,6 @@ _GSETS_ANY_RE = re.compile(
 )
 
 
-_GROUP_BY_RE = re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE)
 _GROUP_BY_END_RE = re.compile(
     r"(?=(?:HAVING|ORDER|LIMIT|OFFSET|FETCH|UNION|INTERSECT|EXCEPT|WINDOW)"
     r"\b)",
@@ -9618,7 +9574,7 @@ def _plain_grouping_one_scope(sql: str) -> str:
         return sql  # the outer query itself uses grouping sets
 
     grouped: set[str] = set()
-    for gm in _unmasked(_GROUP_BY_RE, lx):
+    for gm in _unmasked(_GB_KEYWORD_RE, lx):
         if sub[gm.start()]:
             continue
         # the key list ends at an unbalanced ')', a clause keyword at
@@ -10150,16 +10106,6 @@ def _fromless_parts(body: str):
     return body, None
 
 
-def _in_relation_position(sql: str, pos: int) -> bool:
-    """True when the paren at ``pos`` opens a derived table — directly
-    after FROM/JOIN, or comma-joined inside a FROM clause (``FROM a,
-    (SELECT …) t``)."""
-    return pos in _lex(sql).relation_parens()
-
-
-_PAREN_SEL_ANY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
-
-
 def _collapse_trivial_subquery_wrappers(sql: str) -> str:
     """Strip no-op derived-table shells around subqueries so ONE
     correlation level remains where Presto's decorrelation sees through
@@ -10178,7 +10124,7 @@ def _collapse_trivial_subquery_wrappers(sql: str) -> str:
     while changed:  # one collapse per round
         changed = False
         lx = _lex(sql)
-        for m in _unmasked(_PAREN_SEL_ANY_RE, lx):
+        for m in _unmasked(_PAREN_SEL_RE, lx):
             p = m.start()
             close = lx.match_paren(p + 1)
             body = sql[p + 1 : close - 1]

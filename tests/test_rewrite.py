@@ -775,11 +775,10 @@ def test_lexer_literals_depth_and_matches():
 
 
 def test_relation_position_forward_pass():
-    from presto_ads_spark.rewrite import _in_relation_position
+    from presto_ads_spark.rewrite import _Lex
 
     def rel(sql: str) -> list[int]:
-        return [i for i, c in enumerate(sql) if c == "(" and
-                _in_relation_position(sql, i)]
+        return sorted(_Lex(sql).relation_parens())
 
     sql = "SELECT f(x) FROM a, (SELECT 1) t JOIN (b) ON (c) WHERE y IN (z)"
     assert rel(sql) == [sql.index("(SELECT"), sql.index("(b)")]
