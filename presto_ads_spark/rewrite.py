@@ -2073,8 +2073,6 @@ _WADL_FNS = (
 _WADL_LITERAL_OK = re.compile(r"^[\d\s.,()+\-]*$")
 _WADL_NUM = re.compile(r"(?<![\w.])-?\d+(?:\.\d+)?(?![\w.])")
 _WADL_CMP_RE = re.compile(r"\barray\s*\(", re.IGNORECASE)
-
-
 _WADL_CMP_OP_RE = re.compile(r"\s*(!=|<>|<=|>=|=|<|>)\s*")
 
 
@@ -2240,7 +2238,7 @@ def _lcd_fix_body(body: str, env: dict) -> str:
     body = _map_fn_args(body, "concat", concat_fix)
     # top-level || chain
     parts, start = [], 0
-    for k in _lex(body).top_level(0, len(body) - 1, "|"):
+    for k in _Lex(body).top_level(0, len(body) - 1, "|"):
         if k >= start and body[k + 1] == "|":
             parts.append(body[start:k])
             start = k + 2
@@ -2471,9 +2469,9 @@ def _rewrite_try_generic(sql: str) -> str:
                     ):
                         s = s[1:s.rstrip().rindex(")")].strip()
                     mu = re.match(r"^([-+])\s*\(", s)
-                    if mu and _Lex(
-                        s).match_paren(mu.end()
-                    ) == len(s.rstrip()):
+                    if mu and _Lex(s).match_paren(mu.end()) == len(
+                        s.rstrip()
+                    ):
                         inner = _try_side(
                             s[mu.end():s.rstrip().rindex(")")].strip()
                         )
