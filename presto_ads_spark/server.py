@@ -22,13 +22,28 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
 def _json_default(v):
-    if isinstance(v, (datetime.datetime, datetime.date)):
+    # datetime is a date subclass, so it is tested first; only datetime's
+    # isoformat takes ``sep``
+    if isinstance(v, datetime.datetime):
         return v.isoformat(sep=" ")
+    if isinstance(v, datetime.date):
+        return v.isoformat()
     if isinstance(v, decimal.Decimal):
         return str(v)
     if isinstance(v, (bytes, bytearray)):
         return v.hex()
     return str(v)
+
+
+def _error_body(query_id: str | None, e: Exception) -> dict:
+    return {
+        "id": query_id,
+        "error": {
+            "message": str(e).split("\n")[0],
+            "errorType": type(e).__name__,
+        },
+        "stats": {"state": "FAILED"},
+    }
 
 
 class StatementServer:
@@ -49,7 +64,12 @@ class StatementServer:
                 pass
 
             def _reply(self, body: dict) -> None:
-                payload = json.dumps(body, default=_json_default).encode()
+                try:
+                    payload = json.dumps(body, default=_json_default)
+                except Exception as e:  # in-band, never a dropped socket
+                    outer._results.pop(body.get("id"), None)
+                    payload = json.dumps(_error_body(body.get("id"), e))
+                payload = payload.encode()
                 self.send_response(200)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(payload)))
@@ -106,14 +126,7 @@ class StatementServer:
             self._results[query_id] = (columns, rows)
             return self._page_body(query_id, 0)
         except Exception as e:  # Presto reports errors in-band
-            return {
-                "id": query_id,
-                "error": {
-                    "message": str(e).split("\n")[0],
-                    "errorType": type(e).__name__,
-                },
-                "stats": {"state": "FAILED"},
-            }
+            return _error_body(query_id, e)
 
     def page(self, query_id: str, token: int) -> dict | None:
         if query_id not in self._results:

@@ -47,6 +47,27 @@ def test_statement_error_in_band(server):
     assert "error" in body and body["error"]["message"]
 
 
+def test_statement_date_and_timestamp_cells(server):
+    body = _post(
+        server, "SELECT DATE '2020-01-01', TIMESTAMP '2020-01-01 01:02:03'"
+    )
+    assert body["stats"]["state"] == "FINISHED"
+    assert body["data"] == [["2020-01-01", "2020-01-01 01:02:03"]]
+
+
+def test_statement_serialization_error_in_band(server, monkeypatch):
+    from presto_ads_spark import server as server_mod
+
+    def boom(v):
+        raise TypeError(f"cannot encode {type(v).__name__}")
+
+    monkeypatch.setattr(server_mod, "_json_default", boom)
+    body = _post(server, "SELECT DATE '2020-01-01' AS d")
+    assert body["stats"]["state"] == "FAILED"
+    assert body["error"]["errorType"] == "TypeError"
+    assert "date" in body["error"]["message"]
+
+
 def test_statement_404(server):
     req = urllib.request.Request(
         f"http://{server.host}:{server.port}/v2/nope", data=b"x", method="POST"
