@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,17 +28,18 @@ _BYTE_SUFFIXES = {
     "m": 1 << 20, "mb": 1 << 20,
     "g": 1 << 30, "gb": 1 << 30,
     "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
 }
+_BYTE_STRING_RE = re.compile(r"(\d+)\s*([a-z]*)")
 
 
 def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-string conf value ("134217728b", "128m", "1g")."""
-    s = str(v).strip().lower()
-    i = len(s)
-    while i > 0 and not s[i - 1].isdigit():
-        i -= 1
-    num, suffix = s[:i], s[i:].strip()
-    return int(num) * _BYTE_SUFFIXES[suffix]
+    """Parse a Spark byte-string conf value ("134217728b", "128m", "1g",
+    "1pb"); anything else raises ``ValueError`` naming the value."""
+    m = _BYTE_STRING_RE.fullmatch(str(v).strip().lower())
+    if m is None or m.group(2) not in _BYTE_SUFFIXES:
+        raise ValueError(f"not a Spark byte string: {v!r}")
+    return int(m.group(1)) * _BYTE_SUFFIXES[m.group(2)]
 
 
 def max_partition_bytes(session: SparkSession | None = None) -> int:
@@ -54,10 +56,7 @@ def max_partition_bytes(session: SparkSession | None = None) -> int:
 
     s = session or SparkSession.getActiveSession()
     if s is not None:
-        try:
-            return _parse_bytes(s.conf.get("spark.sql.files.maxPartitionBytes"))
-        except Exception:
-            pass
+        return _parse_bytes(s.conf.get("spark.sql.files.maxPartitionBytes"))
     return _DEFAULT_MAX_PARTITION_BYTES
 
 

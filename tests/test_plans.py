@@ -4,6 +4,7 @@ the headline queries."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from presto_ads_spark import plans
@@ -304,10 +305,21 @@ def test_scan_parts_reads_max_partition_bytes_conf(spark):
     the conf tuned, a fixture that estimates 1 split at the default must
     estimate many at a tiny split size, and spread() must react."""
     from presto_ads_spark.queries._util import (
+        _parse_bytes,
         max_partition_bytes,
         scan_parts,
         spread,
     )
+
+    # every Spark byte-string suffix parses; a malformed value is loud
+    # (a silent fallback to 128 MB would mis-size every estimate)
+    assert _parse_bytes("134217728b") == 128 << 20
+    assert _parse_bytes("128MB") == _parse_bytes("128m") == 128 << 20
+    assert _parse_bytes("2p") == _parse_bytes("2pb") == 2 << 50
+    assert _parse_bytes(" 7 ") == 7
+    for bad in ("12xb", "mb", "", "1.5g", "-1m"):
+        with pytest.raises(ValueError, match=repr(bad)):
+            _parse_bytes(bad)
 
     key = "spark.sql.files.maxPartitionBytes"
     orig = spark.conf.get(key)
