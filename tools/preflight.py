@@ -13,7 +13,10 @@ Tiers (fastest first, so a red tier fails fast):
   property  tests/test_property.py        — hypothesis invariants
   scalar    tests/test_scalar_corpus.py   — the ported assertFunction corpus
   oracle    tests/test_oracle_parity.py   — DuckDB cross-checks
-  rewrite   tests/test_rewrite.py         — rewrite-layer unit pins
+  rewrite   tests/test_rewrite.py         — rewrite-layer unit pins, plus
+            tests/test_rewrite_snapshot.py  the byte-identity gate over every
+                                            corpus statement (run it after
+                                            any rewrite.py edit)
 
 Usage:
   python tools/preflight.py           # the default pre-commit tier set
@@ -32,7 +35,7 @@ import time
 TIERS = {
     "golden": ["tests/test_golden.py"],
     "property": ["tests/test_property.py"],
-    "rewrite": ["tests/test_rewrite.py"],
+    "rewrite": ["tests/test_rewrite.py", "tests/test_rewrite_snapshot.py"],
     "scalar": ["tests/test_scalar_corpus.py"],
     "oracle": ["tests/test_oracle_parity.py"],
 }
