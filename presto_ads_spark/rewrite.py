@@ -243,15 +243,6 @@ class _Lex:
                 pdepth.append(pd)
         return close, bclose, parens, pdepth, groups, gdepth, commas
 
-    @cached_property
-    def _lower(self) -> str | None:
-        return self.text.lower() if self.text.isascii() else None
-
-    def mentions(self, word: str) -> bool:
-        """False only when ``word`` provably does not occur in the text,
-        in any case: a probe before a case-blind regex scan for it."""
-        return self._lower is None or word.lower() in self._lower
-
     close = property(lambda self: self._structure[0])
     bclose = property(lambda self: self._structure[1])
     parens = property(lambda self: self._structure[2])
@@ -469,6 +460,13 @@ def _text_before(sql: str, end: int) -> str:
     while j and (sql[j - 1].isalnum() or sql[j - 1] == "_"):
         j -= 1
     return sql[max(j - 1, 0) : k]
+
+
+def _lacks(text: str, word: str) -> bool:
+    """True when ``word`` provably occurs nowhere in ``text``, in any
+    case: a cheap probe before a case-blind regex scan for it (an ASCII
+    text is checked; others are assumed to hold it)."""
+    return text.isascii() and word.lower() not in text.lower()
 
 
 def _literal_mask(sql: str) -> list[bool]:
@@ -872,16 +870,12 @@ def _unnest_replacement(expr, ordinality, alias, col, col2) -> str:
 
 
 def _rename_functions(chunk: str) -> str:
-    # an ASCII chunk that lacks the name in lower case cannot match
-    low = chunk.lower() if chunk.isascii() else None
     for presto, spark in FUNCTION_RENAMES.items():
-        if presto == spark or (low is not None and presto not in low):
+        if presto == spark or _lacks(chunk, presto):
             continue
-        new = re.sub(
+        chunk = re.sub(
             rf"\b{presto}\s*\(", f"{spark}(", chunk, flags=re.IGNORECASE
         )
-        if new != chunk:
-            chunk, low = new, new.lower() if new.isascii() else None
     return chunk
 
 
@@ -1458,9 +1452,9 @@ def _split_top_level(s: str) -> list[str]:
 def _map_fn_args(sql: str, fname: str, xform) -> str:
     """Rewrite every top-level call of ``fname``: xform(args) returns the new
     argument list (list of strings) or None to leave the call unchanged."""
-    lx = _lex(sql)
-    if not lx.mentions(fname):
+    if _lacks(sql, fname):
         return sql
+    lx = _lex(sql)
     pat = re.compile(rf"\b{fname}\s*\(", re.IGNORECASE)
     out, last, pos = [], 0, 0
     for m in _unmasked(pat, lx):
@@ -1483,9 +1477,9 @@ def _replace_fn_calls(sql: str, fname: str, builder) -> str:
     must therefore never emit a same-name call (all current ones rename).
     When the builder declines (None), scanning continues INSIDE the
     call's arguments."""
-    lx = _lex(sql)
-    if not lx.mentions(fname):
+    if _lacks(sql, fname):
         return sql
+    lx = _lex(sql)
     pat = re.compile(rf"\b{fname}\s*\(", re.IGNORECASE)
     out, last = [], 0
     for m in _unmasked(pat, lx):
