@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import math
 import re
+import threading
 from bisect import bisect_left, bisect_right
 from collections.abc import Callable
 from functools import cached_property
@@ -385,16 +386,17 @@ class _Lex:
         return self._relation
 
 
-_LAST_LEX: _Lex | None = None
+# per thread: concurrent rewrites (server request threads) must not
+# evict each other's lexer
+_LAST_LEX = threading.local()
 
 
 def _lex(sql: str) -> _Lex:
     """The lexer for ``sql``; the last one built is reused while the
     text is unchanged, so passes that leave the text alone share it."""
-    global _LAST_LEX
-    lx = _LAST_LEX
+    lx = getattr(_LAST_LEX, "lex", None)
     if lx is None or (lx.text is not sql and lx.text != sql):
-        lx = _LAST_LEX = _Lex(sql)
+        lx = _LAST_LEX.lex = _Lex(sql)
     return lx
 
 

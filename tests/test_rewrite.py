@@ -754,6 +754,34 @@ def test_rewrite_time_is_linear_in_statement_size():
     assert builds1000 == builds500
 
 
+def test_concurrent_rewrites_match_sequential():
+    """Request threads rewrite concurrently: each keeps its own lexer, so
+    interleaved rewrites give the sequential outputs."""
+    import sys
+    import threading
+
+    sqls = [_array_in_sql(n) for n in (40, 41, 42, 43, 44, 45, 46, 47)]
+    want = [rewrite(s) for s in sqls]
+    got: dict[int, str] = {}
+
+    def work(i: int) -> None:
+        for _ in range(3):
+            got[i] = rewrite(sqls[i])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert [got[i] for i in range(8)] == want
+
+
 def test_lexer_literals_depth_and_matches():
     from presto_ads_spark.rewrite import _Lex, _split_literals
 
