@@ -17,8 +17,8 @@ single-quoted string literals, and every rewrite has a unit test.
 
 Lexing contract: a text is lexed once. ``_lex(sql)`` builds one ``_Lex``
 index — string literals, paren/bracket matches and depths, commas — and
-hands the same one back while the text is unchanged, so passes that
-leave the text alone share it. Passes read literal state and depth from
+hands the same one back (per thread) while the text is unchanged, so
+passes that leave the text alone share it. Passes read literal state and depth from
 it and never rescan for literals: a pass walks its matches left to right
 over one lexer and emits into a buffer instead of splicing and
 re-lexing per match. A helper that works on a fragment of the statement
